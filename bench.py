@@ -40,7 +40,7 @@ import sys
 import time
 
 from spark_streaming_practicum_spark.registry import all_queries
-from spark_streaming_practicum_spark.session import build_session
+from spark_streaming_practicum_spark.session import build_session, driver_memory
 
 def _cpu_sample() -> dict | None:
     """One /proc/stat aggregate-cpu snapshot (Linux only; None elsewhere)."""
@@ -337,7 +337,7 @@ def full_sweep() -> None:
     """
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", driver_memory(24))
     cpu0 = _cpu_sample()
     spark = build_session(app_name="ssp-bench-full")
     defs = all_queries()
@@ -397,8 +397,9 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     # Local mode: driver == executor; cached intermediates from 80+
-    # queries would otherwise thrash an 8g storage pool.
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
+    # queries would otherwise thrash an 8g storage pool. Capped by the
+    # host's MemAvailable, like every session default.
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", driver_memory(24))
     spark = build_session(app_name="ssp-bench")
     defs = all_queries()
 

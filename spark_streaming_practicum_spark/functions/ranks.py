@@ -28,14 +28,20 @@ from pyspark.sql import functions as F
 
 # Persisted intermediates must outlive the helper call (the returned
 # plan reads them when the CALLER materializes it), so they cannot be
-# unpersisted before returning. Instead cleanup is centralized here: a
-# bounded FIFO of live persisted frames. Each new helper invocation
-# evicts the oldest entries beyond the cap, so a 350+-query sweep
-# accumulates at most _MAX_LIVE cached frames instead of hundreds.
-# The cap is generous vs. the heaviest composite caller
+# unpersisted before returning. Operator persists routed through
+# ``persisted`` are bounded here: a FIFO of live persisted frames. Each
+# new invocation evicts the oldest entries beyond the cap, so a
+# 350+-query sweep accumulates at most _MAX_LIVE cached frames instead
+# of hundreds. The cap is generous vs. the heaviest composite caller
 # (rfm_customer_segments persists four frames per invocation), so a
 # query's own frames are never evicted before its output materializes —
 # and even if they were, the plan recomputes, losing only speed.
+#
+# The rank helpers below (global_row_number and the cumulative sums) no
+# longer persist: they pin with ``localCheckpoint(eager=False)``, which
+# this FIFO does not track. Those blocks are freed only when the JVM
+# garbage-collects the checkpointed RDD, so release_persisted_frames()
+# and _MAX_LIVE do NOT bound their storage in a long-lived session.
 _live_persisted: list[DataFrame] = []
 _MAX_LIVE = 8
 

@@ -260,10 +260,13 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Round 13: the three quartiles share ONE ranking pass instead of
     three. The rollup is melted to (c_custkey, mid, val) — 3N rows,
-    with each metric mapped order-exactly to DOUBLE (timestamps via
-    unix_micros; counts and epoch-microsecond values are integers
-    < 2^53, so the cast is injective) — and ranked once by
-    (mid, val DESC, c_custkey). Every
+    with each metric mapped to DOUBLE — and ranked once by
+    (mid, val DESC, c_custkey). Recency (unix_micros) and frequency are
+    integers < 2^53, so their cast is injective and order-exact.
+    Monetary is not: it is a DECIMAL(38,6) sum cast to double, and two
+    distinct sums can collide. It stays oracle-exact only because the
+    order is consistent: both engines rank the identical double cast,
+    and c_custkey breaks the resulting ties the same way. Every
     metric contributes exactly N rows (the rollup has no NULLs by
     construction: inner join, then MAX/COUNT/SUM over >=1 order), so
     the within-metric rank is global_rn - mid*N and NTILE(4) is the

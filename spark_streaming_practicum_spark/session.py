@@ -14,6 +14,27 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_cpus() -> int:
+    """CPUs this process may run on: its affinity mask, not the machine."""
+    return len(os.sched_getaffinity(0))
+
+
+def _mem_available_kb() -> int:
+    with open("/proc/meminfo") as meminfo:
+        for line in meminfo:
+            if line.startswith("MemAvailable:"):
+                return int(line.split()[1])
+    return 4 * 1024 * 1024
+
+
+def driver_memory(want_gb: int = 8) -> str:
+    """Driver heap of ``want_gb``, capped at half of MemAvailable (whole
+    GiB, at least 1): in local mode the driver is the executor, and its
+    off-heap memory and Python workers need the other half."""
+    cap_gb = _mem_available_kb() // (2 * 1024 * 1024)
+    return f"{max(1, min(want_gb, cap_gb))}g"
+
+
 def build_session(
     app_name: str = "spark_streaming_practicum_spark",
     master: str | None = None,
@@ -25,8 +46,13 @@ def build_session(
     On the 100 TB cluster the same knobs apply — only master/memory and
     ``spark.sql.shuffle.partitions`` change (there: ~2-3x total cores,
     sized so shuffle partitions stay in the 100-200 MB range).
+
+    Unless ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEMORY`` say otherwise,
+    the master runs one thread per CPU in this process's affinity mask
+    and the driver heap is ``driver_memory()``, so no default exceeds
+    the host it runs on.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or host_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
 
@@ -43,7 +69,7 @@ def build_session(
         # Arrow transfer for the pandas-UDF slow path.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -104,3 +104,58 @@ def test_stream_drain_partitions_env_override(spark, monkeypatch):
     with stream_drain_partitions(spark, 5):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+def test_session_defaults_fit_host(monkeypatch):
+    """With no env override, build_session's master uses the CPUs this
+    process may run on, and every driver-heap default (the package's 8g,
+    bench.py's 24g) stays under half the host's MemAvailable, also on a
+    host smaller than the defaults. The builder is faked, so no second
+    session starts."""
+    import os
+
+    from spark_streaming_practicum_spark import session
+
+    def gib(memory: str) -> int:
+        assert memory.endswith("g"), memory
+        return int(memory[:-1])
+
+    class Built(Exception):
+        pass
+
+    class Builder:
+        conf: dict[str, str] = {}
+
+        def appName(self, _name):
+            return self
+
+        def master(self, master):
+            return self.config("master", master)
+
+        def config(self, key, value):
+            self.conf[key] = value
+            return self
+
+        def getOrCreate(self):
+            raise Built
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    monkeypatch.setattr(session.SparkSession, "builder", Builder())
+    with pytest.raises(Built):
+        session.build_session()
+    host = len(os.sched_getaffinity(0))
+    assert Builder.conf["master"] == f"local[{host}]"
+    assert Builder.conf["spark.sql.shuffle.partitions"] == str(host)
+    assert Builder.conf["spark.driver.memory"] == session.driver_memory()
+
+    avail_gib = session._mem_available_kb() / (1024 * 1024)
+    for want in (8, 24):
+        assert 1 <= gib(session.driver_memory(want)) <= max(1, avail_gib / 2)
+
+    monkeypatch.setattr(session, "_mem_available_kb", lambda: 3 * 1024 * 1024)
+    assert session.driver_memory(8) == "1g"
+    assert session.driver_memory(24) == "1g"
+    monkeypatch.setattr(session, "_mem_available_kb", lambda: 64 * 1024 * 1024)
+    assert session.driver_memory(8) == "8g"
+    assert session.driver_memory(24) == "24g"

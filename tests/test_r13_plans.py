@@ -99,3 +99,23 @@ def test_topo_layers_bellman_optimality(spark):
         else:
             want = max(layers[s_] for s_ in incoming[v]) + 1
             assert lay == want, f"node {v}: layer {lay} != bellman {want}"
+
+
+def test_gbdt_stump_job_count_pinned(spark):
+    """Round 13 pinned gbdt's stump frames with lazy localCheckpoint
+    (119 -> 18 jobs). Each frame is first materialized by the collect of
+    a broadcast exchange, which fires its checkpoint only because Spark
+    4.1 runs broadcast collects as ordinary jobs. If a Spark upgrade or a
+    persist slipping back in breaks that coupling, every round re-executes
+    the stump lineage and the job count drifts; count the jobs of one
+    build + collect under a job group to catch it."""
+    sc = spark.sparkContext
+    group = "pin-gbdt-stump-jobs"
+    sc.setJobGroup(group, "gbdt_stump_boosting job-count pin")
+    try:
+        DEFS["gbdt_stump_boosting"].fn(spark, SF_DIR).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 18, f"gbdt_stump_boosting ran {len(jobs)} jobs, expected 18"

@@ -190,3 +190,63 @@ def test_available_now_drains_and_terminates(spark, dirs):
     q2 = proc.start(text_file_stream(spark, str(dirs["in"])), available_now=True)
     assert q2.awaitTermination(60)
     assert spark.read.parquet(str(dirs["bronze"])).count() == 2
+
+
+def _part_files(path: Path) -> set[str]:
+    return {p.name for p in path.glob("part-*.parquet")}
+
+
+def _drain_available(proc, spark, dirs, files_per_trigger: int) -> None:
+    query = proc.start(
+        text_file_stream(spark, str(dirs["in"]), max_files_per_trigger=files_per_trigger),
+        available_now=True,
+    )
+    assert query.awaitTermination(120)
+
+
+def test_fan_out_sized_from_batch_bytes(spark, dirs):
+    """A micro-batch under ``spark.sql.files.openCostInBytes`` runs one
+    task, so each sink gets exactly one part file per batch however many
+    cores Spark would have split it over; a batch above it keeps Spark's
+    multi-file split. Routing is unchanged either way."""
+    def write_files(prefix: str, n: int, pad: int) -> None:
+        for i in range(n):
+            _write_batch(
+                dirs["in"],
+                f"{prefix}{i}.json",
+                [{"id": f"{prefix}{i}", "name": "x" * pad}, {"id": f"{prefix}{i}-bad"}],
+            )
+
+    # Two micro-batches of four small files each; every file feeds both sinks.
+    write_files("s", 8, pad=8)
+    proc = _processor(dirs)
+    _drain_available(proc, spark, dirs, files_per_trigger=4)
+    assert len(proc.metrics) == 2
+    assert len(_part_files(dirs["bronze"])) == 2
+    assert len(_part_files(dirs["dead"])) == 2
+    assert sorted(r.id for r in spark.read.parquet(str(dirs["bronze"])).collect()) == [
+        f"s{i}" for i in range(8)
+    ]
+    dead = spark.read.parquet(str(dirs["dead"])).collect()
+    assert sorted(r.id for r in dead) == sorted(f"s{i}-bad" for i in range(8))
+    assert {r["_dead_letter_reason"] for r in dead} == {"invalid_schema"}
+
+    # One batch of four files that together exceed a lowered open cost.
+    small_bronze = _part_files(dirs["bronze"])
+    small_dead = _part_files(dirs["dead"])
+    write_files("l", 4, pad=4096)
+    key = "spark.sql.files.openCostInBytes"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "1024")
+    try:
+        proc = _processor(dirs)
+        _drain_available(proc, spark, dirs, files_per_trigger=4)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert len(proc.metrics) == 1 and proc.metrics[0].valid_rows == 4
+    assert len(_part_files(dirs["bronze"]) - small_bronze) > 1
+    assert len(_part_files(dirs["dead"]) - small_dead) > 1
+    assert spark.read.parquet(str(dirs["bronze"])).count() == 12
