@@ -1,9 +1,17 @@
 """Testdata table access.
 
 The harness tables (TESTDATA.md) are one parquet file per table. Reads
-are declared via ``spark.read.parquet`` so Catalyst gets predicate
+go through ``sources.batch.read_parquet`` so Catalyst gets predicate
 pushdown + column pruning for free; at 100 TB these become
 partitioned/bucketed table scans with the same call sites.
+
+Schemas come from a per-file memo, not a fresh footer inference per
+read: inference is a Spark job, and an interactive session re-reads the
+same tables in every query. The memo is keyed by the file's inode, size
+and mtime (ns) plus the session confs that shape parquet-to-Spark type
+conversion, so a rewritten file or a flipped conf re-infers. It covers
+regular files only; a directory's contents can change without any one
+stat moving, so directories infer on every read as before.
 """
 
 from __future__ import annotations
@@ -12,6 +20,8 @@ import os
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .sources.batch import read_parquet
 
 TABLES = (
     "region",
@@ -44,8 +54,23 @@ def _normalize_timestamps(df: DataFrame) -> DataFrame:
     return df
 
 
+def _pin_read_confs(spark: SparkSession) -> None:
+    """Session invariants every read path sets (runtime-settable,
+    idempotent). Defensive UTC: the driver harness may hand us a session
+    without the timezone pin, and timestamp oracle parity requires it
+    (DuckDB is UTC-naive). ``nanosAsLong`` is set before ANY table is
+    read, not only ``events``: it is part of the schema memo's key, so
+    pinning it late would make every file read before the first
+    ``events`` read infer its schema a second time."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one testdata table (lazy; schema from parquet footer).
+    """Scan one testdata table (lazy). The schema is inferred from the
+    parquet footer on the first read of a file and reused, with no job,
+    while the file's inode/size/mtime and the schema-conversion confs are
+    unchanged (``sources.batch.read_parquet``).
 
     ``events.ts`` has been written as parquet TIMESTAMP(NANOS) in some
     testdata generations, which Spark rejects natively; it is read as
@@ -56,20 +81,15 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     flag; those surface as TIMESTAMP_NTZ and are normalized to TIMESTAMP."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    # Defensive: the driver harness may hand us a session without the UTC
-    # timezone pin; timestamp oracle parity requires it (DuckDB is
-    # UTC-naive). Runtime-settable, idempotent.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _pin_read_confs(spark)
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         if isinstance(df.schema["ts"].dataType, T.LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return _normalize_timestamps(df)
-    return _normalize_timestamps(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    return _normalize_timestamps(df)
 
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -79,12 +99,10 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    # Same defensive UTC pin as table(): without it, streamed timestamps
-    # would shift by the session tz offset and diverge from batch reads.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+    # Same pins as table(): without UTC, streamed timestamps would shift
+    # by the session tz offset and diverge from batch reads.
+    _pin_read_confs(spark)
+    raw_schema = read_parquet(spark, f"{sf_dir}/{name}.parquet").schema
     df = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", f"{name}.parquet")

@@ -1939,15 +1939,16 @@ def ml_dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the per-point work is ONE map-side cell assignment +
     one groupBy — no point-to-point distance joins, which is what
     makes this the DBSCAN form that survives 100 TB (exact DBSCAN's
-    eps-range join is quadratic in dense regions). The dense-cell
-    graph is RESOLUTION-bounded, not data-bounded — at most
-    (span/eps)^2 cells regardless of row count — so its connected
-    components run as bounded driver-state union-find (same trade as
-    MMR / the Markov matrix), while every data-sized stage stays
-    distributed. The adjacency join is an equi-join on exploded
-    neighbor offsets (key arithmetic, no inequality join). Labels are
-    the MIN positive-encoded cell id per component — deterministic,
-    so the oracle's recursive-CTE propagation lands on identical ids."""
+    eps-range join is quadratic in dense regions). The cell-count table
+    is RESOLUTION-bounded, not data-bounded — at most (span/eps)^2 cells
+    regardless of row count — so it is collected ONCE, and everything
+    after runs on the driver over that list (same trade as MMR / the
+    Markov matrix): the dense/sparse split, the 9-offset neighbour
+    lookup, union-find and the noise row. No persist, no adjacency
+    join, no second aggregation: one collect. Labels are the MIN
+    positive-encoded cell id per component (union by smaller root) —
+    deterministic, so the oracle's recursive-CTE propagation lands on
+    identical ids."""
     pts = (
         table(spark, sf_dir, "embeddings")
         .select(
@@ -1959,36 +1960,14 @@ def ml_dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cy"),
         )
     )
-    cells = pts.groupBy("cx", "cy").agg(F.count(F.lit(1)).alias("c")).transform(_persisted)
-    dense = cells.filter(F.col("c") >= _DB_MINPTS).select(
-        ((F.col("cx") + _DB_OFF) * _DB_ENC + (F.col("cy") + _DB_OFF)).alias("cid"),
-        "cx",
-        "cy",
-        "c",
-    )
-    # 8-neighborhood adjacency as an equi-join on shifted keys: explode
-    # the 9 offsets on one side, join on the shifted cell id.
-    offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
-    shifted = dense.select(
-        "cid",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        ((F.col("cx") + dx + _DB_OFF) * _DB_ENC + (F.col("cy") + dy + _DB_OFF)).alias(
-                            "ncid"
-                        )
-                    )
-                    for dx, dy in offs
-                ]
-            )
-        ).alias("o"),
-    ).select("cid", F.col("o.ncid").alias("ncid"))
-    nbr = dense.select(F.col("cid").alias("ncid"))
-    edges = shifted.join(nbr, "ncid").select("cid", "ncid")
-    # dense-cell graph: resolution-bounded — union-find on the driver.
-    cell_rows = {r["cid"]: r["c"] for r in dense.collect()}
-    parent = {cid: cid for cid in cell_rows}
+    cells = pts.groupBy("cx", "cy").agg(F.count(F.lit(1)).alias("c")).collect()
+    dense = {(r["cx"], r["cy"]): r["c"] for r in cells if r["c"] >= _DB_MINPTS}
+    sparse = [r["c"] for r in cells if r["c"] < _DB_MINPTS]
+
+    def cid(cx: int, cy: int) -> int:
+        return (cx + _DB_OFF) * _DB_ENC + (cy + _DB_OFF)
+
+    parent = {cid(*xy): cid(*xy) for xy in dense}
 
     def find(x: int) -> int:
         while parent[x] != x:
@@ -1996,27 +1975,19 @@ def ml_dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             x = parent[x]
         return x
 
-    for r in edges.collect():
-        ra, rb = find(r["cid"]), find(r["ncid"])
-        if ra != rb:
-            # union by smaller root so the final label is the min id
-            lo, hi = min(ra, rb), max(ra, rb)
-            parent[hi] = lo
-    from collections import defaultdict
-
-    agg: dict[int, list[int]] = defaultdict(lambda: [0, 0])
-    for cid, c in cell_rows.items():
-        lab = find(cid)
-        agg[lab][0] += 1
-        agg[lab][1] += c
-    noise = cells.filter(F.col("c") < _DB_MINPTS).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_cells"),
-        F.coalesce(F.sum("c"), F.lit(0)).cast("bigint").alias("n_points"),
-    )
-    nrow = noise.collect()[0]
-    out = [
-        (int(lab), int(v[0]), int(v[1])) for lab, v in agg.items()
-    ] + [(-1, int(nrow["n_cells"]), int(nrow["n_points"]))]
+    for cx, cy in dense:
+        for dx in (-1, 0, 1):
+            for dy in (-1, 0, 1):
+                if (cx + dx, cy + dy) in dense:
+                    ra, rb = find(cid(cx, cy)), find(cid(cx + dx, cy + dy))
+                    # union by smaller root so the final label is the min id
+                    parent[max(ra, rb)] = min(ra, rb)
+    agg: dict[int, list[int]] = {}
+    for (cx, cy), c in dense.items():
+        v = agg.setdefault(find(cid(cx, cy)), [0, 0])
+        v[0] += 1
+        v[1] += c
+    out = [(lab, n, p) for lab, (n, p) in agg.items()] + [(-1, len(sparse), sum(sparse))]
     return spark.createDataFrame(
         sorted(out, key=lambda t: (-t[2], t[0])),
         "cluster_id bigint, n_cells bigint, n_points bigint",

@@ -15,6 +15,8 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
+from ..sources.batch import read_parquet
+
 TARGET_FILE_BYTES = 128 * 1024 * 1024  # cluster-appropriate default
 
 
@@ -36,7 +38,7 @@ def compact_parquet(
 
     tmp = Path(tempfile.mkdtemp(dir=src.parent, prefix=f".{src.name}-compact-"))
     (
-        spark.read.parquet(str(src))
+        read_parquet(spark, str(src))
         .coalesce(n_files)
         .write.mode("overwrite")
         .parquet(str(tmp))

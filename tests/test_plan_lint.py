@@ -10,9 +10,15 @@ This sweep keeps that true as the query surface grows.
 
 (True-streaming queries are skipped: constructing them executes the
 stream; their plans are covered by their own e2e tests.)
+
+A source lint rides along: every parquet read in the package goes
+through ``sources.batch.read_parquet``, the one reader that memoizes
+inferred file schemas.
 """
 
 from __future__ import annotations
+
+import pathlib
 
 import pytest
 
@@ -35,3 +41,14 @@ def test_no_cartesian_product_anywhere(spark):
         if "CartesianProduct" in plan:
             offenders.append(name)
     assert not offenders, f"unbounded cartesian products in: {offenders}"
+
+
+def test_parquet_reads_go_through_one_reader():
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "spark_streaming_practicum_spark"
+    offenders = [
+        str(path.relative_to(pkg))
+        for path in pkg.rglob("*.py")
+        if "spark.read.parquet(" in path.read_text()
+        and path.relative_to(pkg).as_posix() != "sources/batch.py"
+    ]
+    assert not offenders, f"spark.read.parquet( outside sources/batch.py: {offenders}"

@@ -6,6 +6,7 @@ a regression shows up as a plan diff rather than a silent slowdown.
 
 import re
 
+from spark_streaming_practicum_spark.catalog import TABLES, table
 from spark_streaming_practicum_spark.plans import formatted_plan
 from spark_streaming_practicum_spark.registry import all_queries
 
@@ -108,7 +109,11 @@ def test_gbdt_stump_job_count_pinned(spark):
     4.1 runs broadcast collects as ordinary jobs. If a Spark upgrade or a
     persist slipping back in breaks that coupling, every round re-executes
     the stump lineage and the job count drifts; count the jobs of one
-    build + collect under a job group to catch it."""
+    build + collect under a job group to catch it. The table schemas are
+    memoized first so the count does not depend on whether an earlier
+    test already read them (a cold read adds one inference job)."""
+    for t in TABLES:
+        table(spark, SF_DIR, t)
     sc = spark.sparkContext
     group = "pin-gbdt-stump-jobs"
     sc.setJobGroup(group, "gbdt_stump_boosting job-count pin")
@@ -118,4 +123,4 @@ def test_gbdt_stump_job_count_pinned(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) == 18, f"gbdt_stump_boosting ran {len(jobs)} jobs, expected 18"
+    assert len(jobs) == 17, f"gbdt_stump_boosting ran {len(jobs)} jobs, expected 17"
