@@ -33,814 +33,20 @@ def _utc_pinned(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[Spark
     return wrapped
 
 
-# Newest operators first: the driver's correctness run samples a subset
-# (the head) of this dict, and enumeration order is the repo's only
-# lever for making that sample exercise the least battle-tested code
-# (round-3 verdict task 7). Standing policy since round 6: registry
-# growth frozen; each round's head = any queries whose OUTPUT (or
-# verification) changed since their last green driver row, then the
-# next tranche of the never-driver-sampled rotation, totalling the
-# driver's 50-sample. The current round's head and rationale are the
-# first block below; prior rounds' blocks follow in order (dict
-# insertion keeps the FIRST occurrence, so the head owns shared names).
-_NEWEST_FIRST = [
-    # Round-13 head (standing policy; registry frozen at 478, ever-
-    # sampled 478/478 after the round-12 tranche-8 head — confirmed by
-    # scripts/rotation_audit.py). Lead with the 38 queries whose PLAN
-    # or implementation changed this round: the four reworks
-    # (rfm single rank pass, ab_permutation prefix-factored hash + melt,
-    # graph_topo_layers path doubling, sim_mmr literal-inlined rounds,
-    # boilerplate scan-side aggregation), the lineage-truncation family
-    # (CC dedup loop + composers, gbdt stump frames, and every user of
-    # the checkpoint-pinned rank/cumsum helpers), and the 10 queries
-    # whose vocab-keyed joins gained SHUFFLE_HASH hints. All 38
-    # strict-OK vs DuckDB at sf0.01 AND sf0.1 this round; head
-    # pre-verified with scripts/driver_contract_sweep.py 50 (log
-    # committed). Then 12 oldest-driver-green fills (last green r01-r3).
-    "rfm_customer_segments",
-    "ab_permutation_test",
-    "graph_topo_layers",
-    "sim_mmr_diversified_topk",
-    "boilerplate_domain_segments",
-    "gbdt_stump_boosting",
-    "dedup_cluster_representatives",
-    "dedup_cluster_quality_representative",
-    "pipeline_corpus_curation",
-    "robust_theil_sen_slope",
-    "xicor_correlation",
-    "linkage_sorted_neighborhood",
-    "histogram_equidepth",
-    "median_rank_ci",
-    "drift_wasserstein_1d",
-    "drift_ks_two_sample",
-    "drift_mmd_linear_paired",
-    "eval_auc_exact",
-    "eval_cumulative_gains",
-    "opt_histogram_selectivity_audit",
-    "retrieval_wand_prune_certificate",
-    "ab_test_mann_whitney",
-    "abc_classification_parts",
-    "causal_uplift_two_model",
-    "kruskal_wallis_h",
-    "stats_jonckheere_terpstra",
-    "wilcoxon_signed_rank",
-    "spearman_rank_correlation",
-    "nb_lang_classifier_eval",
-    "curriculum_perplexity_stages",
-    "text_tfidf_topk",
-    "ts_sax_motif_pairs",
-    "ngram_draft_acceptance_rate",
-    "rlhf_dpo_implicit_reward",
-    "doc_bigram_logprob",
-    "dsir_importance_weights",
-    "eval_ndcg_at_k",
-    "crosslingual_margin_mining",
-    # 12 oldest-driver-green fills (last green rounds 1-3)
-    "rendezvous_shard_assign",
-    "split_train_val_test",
-    "text_chunk_fixed_tokens",
-    "text_pii_redact",
-    "weighted_sample_topk",
-    "ab_test_welch_ttest",
-    "survival_kaplan_meier",
-    "agg_approx_count_distinct",
-    "agg_bitmap_distinct",
-    "agg_count_distinct",
-    "agg_count_distinct_salted",
-    "agg_cube",
-    # Round-12 policy (round-11 verdict tasks 1+2): registry still
-    # frozen at 478, 478/478 oracled. Head = the three queries whose
-    # PLAN changed this round (sparse_cosine_pairs_topk: the full-
-    # vocabulary broadcast is gone — cap materialized as a scalar, df
-    # filtered BEFORE a token-keyed shuffle join, norm joins left to
-    # AQE; sim_ann_lsh_bucketed + sim_ann_ivf: multiprobe generalized
-    # to a true Hamming ball — probe set byte-identical at the default
-    # radius of 1; all three strict-OK vs DuckDB at BOTH scales this
-    # round, 20x vocab probe re-run: ratio 2.3, sublinear), then ALL 34
-    # tranche-8 names (the entire never-driver-sampled tail — after the
-    # driver samples these, ever-sampled = 478/478), then the 10
-    # queries whose plans changed in the round-12 broadcast audit
-    # (open-domain frames de-hinted; strict-OK both scales), then 3
-    # oldest-driver-green fills (last green r01). Pre-verified with
-    # scripts/driver_contract_sweep.py 50 (log committed).
-    "sparse_cosine_pairs_topk",
-    "sim_ann_lsh_bucketed",
-    "sim_ann_ivf",
-    "negative_sampling_unigram",
-    "ope_ips_estimate",
-    "pareto_frontier_price_date",
-    "pca_power_iteration_top_pc",
-    "pipe_syntax_revenue",
-    "pit_join_features",
-    "plsa_em_step_topics",
-    "profile_table_stats",
-    "ransac_line_fit",
-    "recsys_item_item_cosine",
-    "recursive_cte_reachability",
-    "reorder_cycle_by_segment",
-    "repetition_dup_ngram_fraction",
-    "rlhf_preference_pairs",
-    "rm3_query_expansion",
-    "scd2_incremental_apply",
-    "session_window_builtin",
-    "sft_pack_conversations",
-    "shard_manifest_checksums",
-    "skew_key_diagnostics",
-    "spearman_rank_correlation",
-    "supplier_concentration_hhi",
-    "t5_span_corruption_prep",
-    "target_encode_loo",
-    "term_burstiness_fano",
-    "token_zipf_fit",
-    "tokenizer_fertility_by_lang",
-    "topk_global",
-    "udtf_sentence_segments",
-    "ul2_denoiser_mix",
-    "user_event_streaks",
-    "vector_normalize",
-    "woe_iv_binning",
-    "zorder_cluster_keys",
-    # 10 plan-changed re-checks (round-12 broadcast audit: open-domain
-    # frames de-hinted; all strict-OK both scales post-change)
-    "text_tfidf_topk",
-    "ts_sax_motif_pairs",
-    "ngram_draft_acceptance_rate",
-    "nb_lang_classifier_eval",
-    "rlhf_dpo_implicit_reward",
-    "doc_bigram_logprob",
-    "dsir_importance_weights",
-    "curriculum_perplexity_stages",
-    "eval_ndcg_at_k",
-    "crosslingual_margin_mining",
-    # 3 oldest-driver-green re-checks (fills; last green r01)
-    "embedding_quantize_int8",
-    "ids_contiguous_global",
-    "pack_sequences_budget",
-    # Round-11 policy (round-10 verdict tasks 1+2): registry still
-    # frozen at 478, 478/478 oracled. ONE query's output changed this
-    # round — sparse_cosine_pairs_topk (de-vacuated at sf0.1: the
-    # absolute df cap of 40 emptied the weight table there; now a
-    # rarity-relative max(40, 4*min_df) cap, 20 rows strict-OK at both
-    # scales) — so it leads the head per standing policy. The rest of
-    # the 50-head is the first 49 names of tranche 7 (alphabetical,
-    # staged last round); the 50th staged name
-    # (negative_sampling_unigram) moves to the round-12 tail, leaving
-    # exactly 34 never-driver-sampled names for round 12's tail-clear.
-    # Pre-verified with scripts/driver_contract_sweep.py 50 at sf0.01
-    # (log committed to bench_history/).
-    "sparse_cosine_pairs_topk",
-    "abc_classification_parts",
-    "als_user_factors_one_step",
-    "anova_oneway_f",
-    "approx_topk_event_types",
-    "bandit_ucb1_allocation",
-    "benford_first_digit",
-    "boilerplate_domain_segments",
-    "bpe_learn_merges",
-    "bradley_terry_one_step",
-    "causal_diff_in_diff",
-    "cdc_snapshot_diff",
-    "collocations_pmi_top",
-    "compaction_bin_packing",
-    "conformal_prediction_interval",
-    "contamination_ngram_overlap",
-    "contrastive_pair_mining",
-    "coreset_kcenter_greedy",
-    "ctr_empirical_bayes_shrinkage",
-    "curation_attrition_funnel",
-    "cv_kfold_gap",
-    "dataset_card_summary",
-    "decision_stump_info_gain",
-    "doc_bigram_logprob",
-    "domain_quota_sample",
-    "dsir_importance_weights",
-    "duplicate_payment_screen",
-    "elasticity_loglog_by_segment",
-    "events_gap_fill_hourly",
-    "explain_shapley_global_importance",
-    "feature_hashing_collision_audit",
-    "fim_psm_transform",
-    "funnel_stage_latency",
-    "fuzzy_join_blocked_levenshtein",
-    "gbdt_stump_boosting",
-    "gdpr_erasure_audit",
-    "hbos_outlier_score",
-    "hybrid_rrf_fusion",
-    "impute_group_median",
-    "incremental_agg_refresh",
-    "jl_random_projection",
-    "keyphrase_textrank",
-    "kmeans_lloyd_assignments",
-    "kruskal_wallis_h",
-    "lang_temperature_resample",
-    "length_bucket_batches",
-    "limit_scan",
-    "linkage_fellegi_sunter_em",
-    "lm_kneser_ney_bigrams",
-    "lsh_parameter_planner",
-    # tranche 8 staged (round-12 tail-clear: the 34 never-driver-sampled
-    # names remaining after the round-11 head; alphabetical. After
-    # round 12 samples these, the driver tail is CLEAR).
-    "negative_sampling_unigram",
-    "ope_ips_estimate",
-    "pareto_frontier_price_date",
-    "pca_power_iteration_top_pc",
-    "pipe_syntax_revenue",
-    "pit_join_features",
-    "plsa_em_step_topics",
-    "profile_table_stats",
-    "ransac_line_fit",
-    "recsys_item_item_cosine",
-    "recursive_cte_reachability",
-    "reorder_cycle_by_segment",
-    "repetition_dup_ngram_fraction",
-    "rlhf_preference_pairs",
-    "rm3_query_expansion",
-    "scd2_incremental_apply",
-    "session_window_builtin",
-    "sft_pack_conversations",
-    "shard_manifest_checksums",
-    "skew_key_diagnostics",
-    "spearman_rank_correlation",
-    "supplier_concentration_hhi",
-    "t5_span_corruption_prep",
-    "target_encode_loo",
-    "term_burstiness_fano",
-    "token_zipf_fit",
-    "tokenizer_fertility_by_lang",
-    "topk_global",
-    "udtf_sentence_segments",
-    "ul2_denoiser_mix",
-    "user_event_streaks",
-    "vector_normalize",
-    "woe_iv_binning",
-    "zorder_cluster_keys",
-    # Round-10 policy (round-9 verdict task 1): registry still frozen at
-    # 478, 478/478 oracled, NO query's output or verification changed
-    # since its last green driver row — so the entire 50-head is
-    # tranche 6 of the never-driver-sampled rotation (134 remained
-    # entering this round). Composition per the verdict's ordering:
-    # the 4 staged TPC-H shapes (q9/q10/q13/q20) + the 46-name
-    # suggestion from scripts/rotation_audit.py (largest families
-    # first: pipeline/embedding/privacy/geo/vocab x3, then the 2-name
-    # families median/seq/revenue/ab/survival/drift/chi2/corpus/
-    # sample/quality/logreg/dq/sort/url, then attribution/poisson/
-    # path) = exactly the driver's 50-sample. Pre-verified with
-    # scripts/driver_contract_sweep.py 50 at sf0.01 (log committed to
-    # bench_history/).
-    "q9_product_profit",
-    "q10_returned_items",
-    "q13_customer_distribution",
-    "q20_dominant_supplier",
-    "pipeline_pretraining_prep",
-    "pipeline_corpus_curation",
-    "pipeline_bronze_to_gold",
-    "embedding_covariance_topk",
-    "embedding_pq_codebook",
-    "embedding_knn_outlier_score",
-    "privacy_k_anonymity_audit",
-    "privacy_l_diversity_audit",
-    "privacy_t_closeness_audit",
-    "geo_grid_cell_counts",
-    "geo_grid_knn_join",
-    "geo_trajectory_stats",
-    "vocab_oov_rate",
-    "vocab_growth_heaps",
-    "vocab_hapax_rate",
-    "median_mad_outliers",
-    "median_rank_ci",
-    "seq_pattern_followed_by",
-    "seq_match_recognize_emulation",
-    "revenue_gini_lorenz",
-    "revenue_wow_growth",
-    "ab_test_power_sample_size",
-    "ab_test_mann_whitney",
-    "survival_logrank_test",
-    "survival_nelson_aalen",
-    "drift_ks_two_sample",
-    "drift_psi_value_distribution",
-    "chi2_independence_test",
-    "chi2_feature_selection",
-    "corpus_diversity_indices",
-    "corpus_mixture_weights",
-    "sample_neyman_allocation",
-    "sample_reservoir_per_group",
-    "quality_gopher_gates",
-    "quality_model_score",
-    "logreg_gd_two_steps",
-    "logreg_calibration_bins",
-    "dq_expectation_checks",
-    "dq_referential_integrity",
-    "sort_multi_key_nulls",
-    "sort_global_full",
-    "url_parse_host_stats",
-    "url_canonicalize_dedup",
-    "attribution_last_touch_linear",
-    "poisson_bootstrap_ci",
-    "path_top_sequences",
-    # tranche 7 as staged in round 10 (SUPERSEDED by the round-11 block
-    # above, which owns these names via dict-first-occurrence; kept for
-    # the historical record like every prior round's block).
-    "abc_classification_parts",
-    "als_user_factors_one_step",
-    "anova_oneway_f",
-    "approx_topk_event_types",
-    "bandit_ucb1_allocation",
-    "benford_first_digit",
-    "boilerplate_domain_segments",
-    "bpe_learn_merges",
-    "bradley_terry_one_step",
-    "causal_diff_in_diff",
-    "cdc_snapshot_diff",
-    "collocations_pmi_top",
-    "compaction_bin_packing",
-    "conformal_prediction_interval",
-    "contamination_ngram_overlap",
-    "contrastive_pair_mining",
-    "coreset_kcenter_greedy",
-    "ctr_empirical_bayes_shrinkage",
-    "curation_attrition_funnel",
-    "cv_kfold_gap",
-    "dataset_card_summary",
-    "decision_stump_info_gain",
-    "doc_bigram_logprob",
-    "domain_quota_sample",
-    "dsir_importance_weights",
-    "duplicate_payment_screen",
-    "elasticity_loglog_by_segment",
-    "events_gap_fill_hourly",
-    "explain_shapley_global_importance",
-    "feature_hashing_collision_audit",
-    "fim_psm_transform",
-    "funnel_stage_latency",
-    "fuzzy_join_blocked_levenshtein",
-    "gbdt_stump_boosting",
-    "gdpr_erasure_audit",
-    "hbos_outlier_score",
-    "hybrid_rrf_fusion",
-    "impute_group_median",
-    "incremental_agg_refresh",
-    "jl_random_projection",
-    "keyphrase_textrank",
-    "kmeans_lloyd_assignments",
-    "kruskal_wallis_h",
-    "lang_temperature_resample",
-    "length_bucket_batches",
-    "limit_scan",
-    "linkage_fellegi_sunter_em",
-    "lm_kneser_ney_bigrams",
-    "lsh_parameter_planner",
-    "negative_sampling_unigram",
-    "ope_ips_estimate",
-    "pareto_frontier_price_date",
-    "pca_power_iteration_top_pc",
-    "pipe_syntax_revenue",
-    "pit_join_features",
-    "plsa_em_step_topics",
-    "profile_table_stats",
-    "ransac_line_fit",
-    "recsys_item_item_cosine",
-    "recursive_cte_reachability",
-    "reorder_cycle_by_segment",
-    "repetition_dup_ngram_fraction",
-    "rlhf_preference_pairs",
-    "rm3_query_expansion",
-    "scd2_incremental_apply",
-    "session_window_builtin",
-    "sft_pack_conversations",
-    "shard_manifest_checksums",
-    "skew_key_diagnostics",
-    "sparse_cosine_pairs_topk",
-    "spearman_rank_correlation",
-    "supplier_concentration_hhi",
-    "t5_span_corruption_prep",
-    "target_encode_loo",
-    "term_burstiness_fano",
-    "token_zipf_fit",
-    "tokenizer_fertility_by_lang",
-    "topk_global",
-    "udtf_sentence_segments",
-    "ul2_denoiser_mix",
-    "user_event_streaks",
-    "vector_normalize",
-    "woe_iv_binning",
-    "zorder_cluster_keys",
-    # Round-9 policy (round-8 verdict tasks 1+2): registry still frozen
-    # at 478. ONE query's verification changed and must re-verify
-    # driver-side: stream_dedup_within_watermark — the registry's last
-    # rows-only entry — now carries a certified-invariant oracle (the
-    # deterministic key set + a kept-row containment boolean; the
-    # arrival-order property tests remain the state-semantics check),
-    # making the registry 478/478 oracled. The rest of the 50-head is
-    # tranche 5 of the never-driver-sampled rotation in the verdict's
-    # ordering: graph 7, sql 7, sim 6, ts 6, agg 5, udf 5, then the
-    # first 13 of the 17 remaining TPC-H q* shapes (q9/q10/q13/q20 plus
-    # pipeline/privacy/geo/vocab lead tranche 6 next round).
-    "stream_dedup_within_watermark",
-    "graph_pagerank_trade",
-    "graph_triangle_count",
-    "graph_label_propagation",
-    "graph_link_prediction_jaccard",
-    "graph_modularity_score",
-    "graph_sssp_bellman_ford",
-    "graph_kcore_peel",
-    "sql_udf_net_revenue",
-    "sql_group_order_by_all",
-    "sql_lateral_column_alias",
-    "sql_scripting_control_flow",
-    "sql_pivot_clause",
-    "sql_unpivot_clause",
-    "sql_parameterized_identifier",
-    "sim_cosine_topk",
-    "sim_cosine_topk_pandas",
-    "sim_label_centroid",
-    "sim_ann_ivf",
-    "sim_mmr_diversified_topk",
-    "sim_maxsim_late_interaction",
-    "ts_ewma_daily",
-    "ts_acf_daily_volume",
-    "ts_seasonal_decompose_dow",
-    "ts_changepoint_cusum",
-    "ts_theil_sen_trend",
-    "ts_forecast_backtest_naive",
-    "agg_listagg_ordered",
-    "agg_statistics",
-    "agg_bool",
-    "agg_collect_set_sorted",
-    "agg_regression_price_qty",
-    "udf_pandas_scalar",
-    "udf_grouped_map_zscore",
-    "udf_grouped_agg_median",
-    "udf_grouped_map_arrow",
-    "udf_pandas_scalar_iter",
-    "q4_order_priority",
-    "q12_priority_by_returnflag",
-    "q14_promo_revenue",
-    "q16_supplier_cnt_by_part",
-    "q19_discounted_revenue",
-    "q22_idle_rich_customers",
-    "q11_important_parts",
-    "q15_top_supplier",
-    "q17_small_quantity_revenue",
-    "q21_sole_late_supplier",
-    "q2_min_cost_supplier",
-    "q7_volume_shipping",
-    "q8_market_share",
-    # tranche 6 head (never-sampled; next round's candidates)
-    "q9_product_profit",
-    "q10_returned_items",
-    "q13_customer_distribution",
-    "q20_dominant_supplier",
-    "pipeline_pretraining_prep",
-    "pipeline_corpus_curation",
-    "pipeline_bronze_to_gold",
-    "privacy_k_anonymity_audit",
-    "privacy_l_diversity_audit",
-    "privacy_t_closeness_audit",
-    "geo_grid_cell_counts",
-    "geo_grid_knn_join",
-    "geo_trajectory_stats",
-    "vocab_oov_rate",
-    "vocab_growth_heaps",
-    "vocab_hapax_rate",
-    # Round-8 policy (round-7 verdict task 1): registry still frozen.
-    # ONE output changed this round and must re-verify driver-side:
-    # dedup_simhash's recall certificate column is now
-    # simhash_recall_ge_80pct — the new sf0.1 strict-sweep tier
-    # measured 0.891 recall at sf0.1 (the >=0.9 bound held only at toy
-    # sample sizes; see the query docstring and PERFORMANCE.md round-8
-    # entry for the Hamming-ceiling analysis). The dedup verify-leg
-    # hot-list hashing and the _minhash_lsh_pairs parameter drop are
-    # A/B-checked output-identical. The rest of the 50-head is tranche
-    # 4 of the never-driver-sampled rotation: the 5 biggest remaining
-    # families, largest first (text 14, eval 13, dedup 10, mm 9,
-    # graph 7; the driver's 50-sample takes the 4 output-changed
-    # re-checks + the first 46 = text+eval+dedup+mm exactly; the 7
-    # graph names lead tranche 5).
-    #
-    # Output-changed this round (all found by the new sf0.1 tier):
-    # dedup_simhash (recall cert re-pinned at 0.8), grpo_group_advantage
-    # (IEEE -0.0 normalized), quantile_normalize_sources +
-    # ts_interpolate_linear (AVG -> exact-decimal sum/count; interp
-    # rounding idiom). ts_interval_islands_merge also changed plan
-    # (windows over distinct starts) but its output is bit-identical —
-    # verified against the single-threaded oracle at both scales.
-    "dedup_simhash",
-    "grpo_group_advantage",
-    "quantile_normalize_sources",
-    "ts_interpolate_linear",
-    "text_bm25_topk",
-    "text_token_count",
-    "text_lang_id",
-    "text_lang_id_trigram",
-    "text_quality_score",
-    "text_term_frequency",
-    "text_bigram_frequency",
-    "text_fingerprint",
-    "text_bpe_ish_token_count",
-    "text_char_entropy",
-    "text_readability_flesch",
-    "text_distinct_ngram_ratios",
-    "text_numeric_density",
-    "text_tfidf_topk",
-    "eval_pr_curve_points",
-    "eval_brier_decomposition",
-    "eval_ndcg_at_k",
-    "eval_mrr_recall_at_k",
-    "eval_knn_label_accuracy",
-    "eval_cohens_kappa",
-    "eval_rouge2_pairs",
-    "eval_matryoshka_truncation",
-    "eval_auc_exact",
-    "eval_cumulative_gains",
-    "eval_macro_f1",
-    "eval_expected_calibration_error",
-    "eval_best_f1_threshold",
-    "dedup_crossdoc_ngram_coverage",
-    "dedup_exact",
-    "dedup_keep_first_ts",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "dedup_cluster_representatives",
-    "dedup_paragraph_exact",
-    "dedup_containment_overlap",
-    "dedup_cluster_size_histogram",
-    "dedup_pair_explanation",
-    "mm_binary_metadata",
-    "mm_fake_decode_dims",
-    "mm_frame_sample",
-    "mm_feature_extract",
-    "mm_fake_resize",
-    "mm_feature_extract_arrow",
-    "mm_phash_near_dup",
-    "mm_audio_energy_windows",
-    "mm_video_shot_boundaries",
-    "graph_pagerank_trade",
-    "graph_triangle_count",
-    "graph_label_propagation",
-    "graph_link_prediction_jaccard",
-    "graph_modularity_score",
-    "graph_sssp_bellman_ford",
-    "graph_kcore_peel",
-    # round 7: output-changed (high-bit treated split; Cochran oracle
-    # now generated from _COCHRAN_TASKS) — re-verified driver-side in
-    # CORRECTNESS_r07 (green)
-    "causal_uplift_two_model",
-    "stats_mantel_haenszel_or",
-    "drift_mmd_linear_paired",
-    "stats_cochran_q",
-    # never-driver-sampled rotation, tranche 3a: streaming family
-    # (stream_dedup_within_watermark is the registry's one rows-only
-    # query — state-arrival-order specific)
-    "stream_tumbling_hour",
-    "stream_sliding_window",
-    "stream_session_window",
-    "stream_session_window_true",
-    "stream_update_mode_counts",
-    "stream_static_join",
-    "stream_stream_join",
-    "stream_outer_join_watermark",
-    "stream_incremental_dedup",
-    "stream_dedup_within_watermark",
-    "stream_stateful_user_profile",
-    # tranche 3b: joins
-    "join_inner_equi",
-    "join_left_outer",
-    "join_right_outer",
-    "join_full_outer",
-    "join_semi",
-    "join_anti",
-    "join_cross",
-    "join_range_events",
-    "join_broadcast_star",
-    "join_q3_shipping_priority",
-    "join_q5_local_supplier",
-    "join_null_skew_outer",
-    "join_runtime_bloom_filter",
-    "join_shuffle_hash_hint",
-    "join_salted_skew",
-    "join_lateral_topk",
-    # tranche 3c: windows
-    "window_funnel_within_time",
-    "window_nth_value",
-    "window_cume_dist",
-    "window_topk_per_group",
-    "window_rank_dense",
-    "window_lag_lead",
-    "window_running_sum",
-    "window_moving_avg",
-    "window_ntile",
-    "window_sessionize",
-    "window_range_frame",
-    "window_ratio_to_report",
-    # tranche 3d: set ops
-    "set_except_all",
-    "set_union_by_name",
-    "set_union_all",
-    "set_union_distinct",
-    "set_intersect",
-    "set_except",
-    "set_intersect_all",
-    # round 6: structurally/output-changed — must re-verify driver-side
-    "ts_ljung_box_portmanteau",
-    "sketch_bloom_fpr_audit",
-    "lm_stupid_backoff_trigram",
-    "dedup_simhash",
-    "dedup_minhash_lsh",
-    # round 6: new operators (first-time names)
-    "stats_mcnemar_paired",
-    "stats_mantel_haenszel_or",
-    "stats_runs_test_daily",
-    "drift_mmd_linear_paired",
-    "ts_kendall_tau_daily",
-    "ts_page_hinkley_drift",
-    "eval_bleu2_corpus",
-    "graph_katz_centrality",
-    "privacy_dp_topk_exponential",
-    "eval_chrf2_pairs",
-    "rlhf_dpo_implicit_reward",
-    "eval_cer_pairs",
-    "ts_hurst_rescaled_range",
-    "graph_mst_boruvka_round",
-    "window_sliding_median_daily",
-    "stats_bartlett_variances",
-    "stats_cochran_q",
-    "ts_dft_top_periods",
-    "stats_jonckheere_terpstra",
-    "sketch_count_min_audit",
-    "opt_selinger_join_order",
-    "ml_quantile_reg_pinball",
-    "opt_histogram_selectivity_audit",
-    "ts_cross_correlation_ccf",
-    "revenue_theil_index",
-    "window_bollinger_bands_daily",
-    # never-driver-sampled rotation, tranche 2: the driver's 50-sample
-    # reaches 30 of these (45 first-time names total this round)
-    "ingest_valid_roundtrip_sample",
-    "scalar_variant_json",
-    "scalar_xml_roundtrip",
-    "scalar_bit_ops",
-    "scalar_array_setops",
-    "scalar_greatest_least",
-    "scalar_pad_trim",
-    "scalar_try_cast",
-    "scalar_posexplode_ordinality",
-    "scalar_string_fns",
-    "scalar_regexp",
-    "scalar_date_fns",
-    "scalar_math_fns",
-    "scalar_array_fns",
-    "scalar_json_fns",
-    "scalar_case_conditional",
-    "scalar_hash_fns",
-    "scalar_null_safe_eq",
-    "scalar_map_fns",
-    "set_except_all",
-    "set_union_by_name",
-    "set_union_all",
-    "set_union_distinct",
-    "set_intersect",
-    "set_except",
-    "set_intersect_all",
-    "window_funnel_within_time",
-    "window_nth_value",
-    "window_cume_dist",
-    "window_topk_per_group",
-    "window_rank_dense",
-    "window_lag_lead",
-    "window_running_sum",
-    "window_moving_avg",
-    "window_ntile",
-    "window_sessionize",
-    "window_range_frame",
-    # r01-FAIL redemption (green r05) and prior rounds follow
-    "sample_stratified_hash",
-    # round 5: structurally changed (argmax rewrite; shared cert slice)
-    "ngram_draft_acceptance_rate",
-    # round 5: new operators
-    "sketch_misra_gries_heavyhitters",
-    "sample_weighted_es",
-    "graph_hits_hubs_authorities",
-    "retrieval_maxsim_late_interaction",
-    "basket_apriori_triples",
-    "audit_benford_first_digit",
-    "robust_theil_sen_slope",
-    "attribution_markov_removal",
-    "sketch_quantile_mergeable",
-    "ts_sax_motif_pairs",
-    "ml_dbscan_grid_clusters",
-    "linkage_symspell_edit1",
-    "causal_uplift_two_model",
-    "agg_time_decayed_leaderboard",
-    "join_yannakakis_semijoin_reduce",
-    "opt_zonemap_skipping_audit",
-    "window_running_distinct_types",
-    "agg_weighted_median_groups",
-    "sql_collation_case_insensitive",
-    "opt_join_cardinality_estimate",
-    "mm_audio_constellation_match",
-    "ts_holt_linear_forecast",
-    "ml_gmm_em_step",
-    "ml_ols_normal_equation",
-    "graph_random_walk_deterministic",
-    "sketch_bloom_fpr_audit",
-    "text_rake_keyphrases",
-    "opt_agg_pushdown_eager",
-    "ts_interval_islands_merge",
-    "ab_cuped_variance_reduction",
-    "graph_clustering_coefficient",
-    "lm_stupid_backoff_trigram",
-    "window_alert_hysteresis",
-    "sql_session_variables",
-    "stream_tws_alert_hysteresis",
-    "wilcoxon_signed_rank",
-    "levene_brown_forsythe",
-    "friedman_rank_test",
-    "cronbach_alpha_reliability",
-    "ts_ljung_box_portmanteau",
-    "ts_max_drawdown",
-    "retrieval_wand_prune_certificate",
-    "graph_adamic_adar_link_pred",
-    "opt_hilbert_vs_zorder_locality",
-    # round-5 tranche-1 names not re-listed above (dict insertion keeps
-    # the FIRST occurrence, so the tranche-2 head owns the shared names)
-    "ingest_route_valid_agg",
-    "ingest_dead_letter_reasons",
-    "window_ratio_to_report",
-    "join_inner_equi",
-    "join_left_outer",
-    "join_right_outer",
-    "join_full_outer",
-    "join_semi",
-    "join_anti",
-    # round 4: new / structurally changed
-    "ab_permutation_test",
-    "sketch_hll_handbuilt",
-    "ml_isotonic_calibration",
-    "drift_wasserstein_1d",
-    "eval_rank_biased_overlap",
-    "nb_lang_classifier_eval",
-    "survival_cox_one_step",
-    "causal_iv_wald_estimate",
-    "geo_point_in_polygon",
-    "stream_tws_initial_state_counts",
-    "cdc_content_defined_chunks",
-    "moe_router_load_balance",
-    "dedup_longest_shared_run",
-    "ab_sequential_msprt",
-    "split_group_leakage_audit",
-    "doremi_domain_reweight_step",
-    "eval_pass_at_k",
-    "stream_tws_list_state_topvals",
-    "stream_watermark_lateness_plan",
-    "granger_lag_causality",
-    "retrieval_dirichlet_ql",
-    "dedup_bloom_incremental",
-    "minhash_merge_certificate",
-    "stream_tws_map_state_type_counts",
-    "semdedup_cluster_prune",
-    "stream_tws_event_counts",
-    "curriculum_perplexity_stages",
-    "crosslingual_margin_mining",
-    "sketch_join_size_estimate",
-    "stream_join_then_window",
-    "xicor_correlation",
-    # round 3 additions
-    "agg_group_logsumexp",
-    "mann_kendall_trend",
-    "cramers_v_matrix",
-    "benjamini_hochberg_fdr",
-    "propensity_strata_att",
-    "intra_doc_segment_dedup",
-    "dedup_jaccard_prefix_filter",
-    "linkage_sorted_neighborhood",
-    "dedup_cluster_quality_representative",
-    "eval_interrater_agreement",
-    "dp_laplace_noisy_counts",
-    "incremental_join_refresh",
-    "graph_topo_layers",
-    "interval_overlap_join_bucketized",
-    "sketch_theta_distinct",
-    "sim_ann_lsh_bucketed",
-    "sim_ann_ivf",
-    "stream_outer_join_watermark",
-    "stream_session_window_true",
-    "grpo_group_advantage",
-    "bradley_terry_one_step",
-    "ul2_denoiser_mix",
-]
+# The driver's correctness run samples the head of queries(); lead it
+# with the queries whose implementation changed since their last green
+# driver row, then registry order. A misspelt name raises KeyError.
+_HEAD = ("ml_dbscan_grid_clusters",)
 
 
-def _newest_first_defs() -> dict:
+def _driver_order() -> dict:
     defs = all_queries()
-    ordered = {n: defs[n] for n in _NEWEST_FIRST if n in defs}
-    ordered.update((n, d) for n, d in defs.items() if n not in ordered)
-    return ordered
+    return {n: defs[n] for n in _HEAD} | defs
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return {name: _utc_pinned(d.fn) for name, d in _newest_first_defs().items()}
+    return {name: _utc_pinned(d.fn) for name, d in _driver_order().items()}
 
 
 def oracle_sql() -> dict[str, str]:
@@ -849,6 +55,6 @@ def oracle_sql() -> dict[str, str]:
     rows-only check."""
     return {
         name: d.oracle
-        for name, d in _newest_first_defs().items()
+        for name, d in _driver_order().items()
         if d.oracle is not None
     }

@@ -9,6 +9,8 @@ Output contract (round 3 — driver-parseable):
     survive the driver's bounded tail capture:
         {"metric": ..., "value": <total_sec>, "unit": "sec",
          "n_queries": N, "sf": <sf>}
+    where ``sf`` is the number in the data dir's ``sf<x>`` name, or null
+    for a dir named otherwise.
     Round 2 emitted everything on one ~2.5 KB line and the driver's tail
     window truncated its head, producing ``"parsed": null`` — hence the
     split.
@@ -36,9 +38,13 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
+from pyspark.sql import SparkSession
+
+from spark_streaming_practicum_spark.functions.ranks import release_persisted_frames
 from spark_streaming_practicum_spark.registry import all_queries
 from spark_streaming_practicum_spark.session import build_session, driver_memory
 
@@ -325,6 +331,47 @@ def compare(current_path: str, prev_path: str) -> int:
     return 1 if investigate else 0
 
 
+def sf_label(sf_dir: str) -> float | None:
+    """The scale factor a data dir is named for (``.../sf0.1/`` -> 0.1);
+    None for a dir not named ``sf<number>``, such as a replicated lake."""
+    m = re.fullmatch(r"sf(\d+(?:\.\d+)?)", os.path.basename(sf_dir.rstrip("/")))
+    return float(m.group(1)) if m else None
+
+
+def _timed_run(spark: SparkSession, fn, sf_dir: str) -> float:
+    """Seconds to build and materialize one query (noop sink; ``count()``
+    for a streaming frame). Afterwards its caches and the bounded FIFO of
+    operator-persisted frames are dropped, so nothing a run pins can pile
+    up into storage-memory eviction thrash for the next one."""
+    start = time.perf_counter()
+    try:
+        df = fn(spark, sf_dir)
+        if df.isStreaming:
+            df.count()
+        else:
+            df.write.mode("overwrite").format("noop").save()
+        return time.perf_counter() - start
+    finally:
+        spark.catalog.clearCache()
+        release_persisted_frames()
+
+
+def _start(app_name: str) -> tuple[str, float | None, SparkSession]:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = sf_label(sf_dir)
+    # Local mode: driver == executor; cached intermediates from 80+
+    # queries would otherwise thrash an 8g storage pool. Capped by the
+    # host's MemAvailable, like every session default.
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", driver_memory(24))
+    return sf_dir, sf, build_session(app_name=app_name)
+
+
+def _write_detail(filename: str, detail: dict) -> None:
+    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), filename)
+    with open(path, "w") as f:
+        json.dump(detail, f, indent=1, sort_keys=True)
+
+
 def full_sweep() -> None:
     """--full: one timed run of EVERY registered query (478) at sf_dir,
     written to BENCH_FULL.json. Closes the round-5 bench blind spot
@@ -335,72 +382,51 @@ def full_sweep() -> None:
     main(). Compare with:
         python bench.py --compare BENCH_FULL_prev.json --detail BENCH_FULL.json
     """
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", driver_memory(24))
+    sf_dir, sf, spark = _start("ssp-bench-full")
     cpu0 = _cpu_sample()
-    spark = build_session(app_name="ssp-bench-full")
     defs = all_queries()
-    from spark_streaming_practicum_spark.functions.ranks import (
-        release_persisted_frames,
-    )
-
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     for name in sorted(defs):
-        start = time.perf_counter()
         try:
-            df = defs[name].fn(spark, sf_dir)
-            if df.isStreaming:
-                df.count()
-            else:
-                df.write.mode("overwrite").format("noop").save()
-            timings[name] = round(time.perf_counter() - start, 3)
+            timings[name] = round(_timed_run(spark, defs[name].fn, sf_dir), 3)
         except Exception as exc:  # noqa: BLE001 — recorded, sweep continues
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-        spark.catalog.clearCache()
-        release_persisted_frames()
     total = round(sum(timings.values()), 3)
-    detail = {
-        "metric": "full-registry query wall time (noop-materialized, 1 run)",
-        "value": total,
-        "unit": "sec",
-        "n_queries": len(timings),
-        "queries": timings,
-        "errors": errors,
-        "sf": float(sf),
-        "host": _host_signature(cpu0),
-    }
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json")
-    with open(path, "w") as f:
-        json.dump(detail, f, indent=1, sort_keys=True)
+    metric = "full-registry query wall time (noop-materialized, 1 run)"
+    _write_detail(
+        "BENCH_FULL.json",
+        {
+            "metric": metric,
+            "value": total,
+            "unit": "sec",
+            "n_queries": len(timings),
+            "queries": timings,
+            "errors": errors,
+            "sf": sf,
+            "host": _host_signature(cpu0),
+        },
+    )
     print(
         json.dumps(
             {
-                "metric": detail["metric"],
+                "metric": metric,
                 "value": total,
                 "unit": "sec",
                 "n_queries": len(timings),
                 "n_errors": len(errors),
-                "sf": float(sf),
+                "sf": sf,
             }
         )
     )
-    if errors:
-        for name, err in sorted(errors.items()):
-            print(f"FULL-SWEEP FAILED {name}: {err}", file=sys.stderr)
+    for name, err in sorted(errors.items()):
+        print(f"FULL-SWEEP FAILED {name}: {err}", file=sys.stderr)
     spark.stop()
     sys.exit(1 if errors else 0)
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # Local mode: driver == executor; cached intermediates from 80+
-    # queries would otherwise thrash an 8g storage pool. Capped by the
-    # host's MemAvailable, like every session default.
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", driver_memory(24))
-    spark = build_session(app_name="ssp-bench")
+    sf_dir, sf, spark = _start("ssp-bench")
     defs = all_queries()
 
     # Warm up the JVM, whole-stage-codegen compilation and parquet reader
@@ -408,16 +434,13 @@ def main() -> None:
     # factor — measured times then reflect steady-state execution.
     # A warmup failure means the headline query itself is broken: fail
     # loudly and name it (round-2 verdict: silent `pass` hid breakage).
-    warm_dir = "/root/testdata/sf0.001"
     warm_failures: list[tuple[str, str]] = []
     for name in HEADLINE:
         if name not in defs:
             warm_failures.append((name, "not in registry"))
             continue
         try:
-            df = defs[name].fn(spark, warm_dir)
-            if not df.isStreaming:
-                df.write.mode("overwrite").format("noop").save()
+            _timed_run(spark, defs[name].fn, "/root/testdata/sf0.001")
         except Exception as exc:  # noqa: BLE001 — reported and fatal below
             warm_failures.append((name, f"{type(exc).__name__}: {exc}"))
     if warm_failures:
@@ -425,39 +448,15 @@ def main() -> None:
             print(f"WARMUP FAILED {name}: {err[:300]}", file=sys.stderr)
         spark.stop()
         sys.exit(2)
-    # Warmup caches must not occupy (and thrash) storage memory during
-    # the measured runs.
-    spark.catalog.clearCache()
     # Host signature covers the MEASURED window only (warmup excluded).
     cpu0 = _cpu_sample()
 
-    def run_once(name: str) -> float:
-        fn = defs[name].fn
-        start = time.perf_counter()
-        df = fn(spark, sf_dir)
-        if df.isStreaming:
-            df.count()
-        else:
-            df.write.mode("overwrite").format("noop").save()
-        return time.perf_counter() - start
-
     # min of 2 runs per query: the host is shared, and the minimum is the
     # stable estimator of actual plan cost under background load.
-    from spark_streaming_practicum_spark.functions.ranks import (
-        release_persisted_frames,
-    )
-
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        timings[name] = round(min(run_once(name), run_once(name)), 3)
-        # Isolate queries: run 2 of a query may reuse run 1's persisted
-        # subtrees (that reuse is part of the operator's own design), but
-        # caches must never leak across queries and pile up into
-        # storage-memory eviction thrash. Operator persists route
-        # through the bounded FIFO since round 4 — drain it too so its
-        # references don't pin the frames clearCache just dropped.
-        spark.catalog.clearCache()
-        release_persisted_frames()
+    timings = {
+        name: round(min(_timed_run(spark, defs[name].fn, sf_dir) for _ in range(2)), 3)
+        for name in HEADLINE
+    }
 
     total = round(sum(timings.values()), 3)
     # ONE metric string everywhere (round-3 verdict: the detail file and
@@ -470,12 +469,10 @@ def main() -> None:
         "unit": "sec",
         "n_queries": len(timings),
         "queries": timings,
-        "sf": float(sf),
+        "sf": sf,
         "host": _host_signature(cpu0),
     }
-    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
-    with open(detail_path, "w") as f:
-        json.dump(detail, f, indent=1, sort_keys=True)
+    _write_detail("BENCH_DETAIL.json", detail)
     # Per-query map on its own EARLY stdout line (survives even when only
     # the file is lost); the FINAL line is compact so the driver's
     # bounded tail capture always parses it.
@@ -487,7 +484,7 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "n_queries": len(timings),
-                "sf": float(sf),
+                "sf": sf,
             }
         )
     )

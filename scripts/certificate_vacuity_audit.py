@@ -15,7 +15,7 @@ count-of-defects), classify it as
                already falsifies defects in it;
 - PROVEN     — constant on clean data, but a round-11/12 code mutation
                demonstrably flipped it (mutation table in
-               scripts/mutation_probe_r12.py);
+               scripts/mutation_probe_r12.py, in git history at 8cabfc2);
 - VACUOUS    — constant on clean data and no mutation has flipped it:
                needs a data-mutation falsifier test.
 
@@ -83,7 +83,8 @@ CANDIDATES: dict[str, list[str]] = {
 }
 
 # Certificates already flipped by a recorded code mutation
-# (scripts/mutation_probe_r12.py table, r11 sed pass + r12 attr re-run).
+# (scripts/mutation_probe_r12.py table in git history at 8cabfc2,
+# r11 sed pass + r12 attr re-run).
 MUTATION_PROVEN = {
     ("dedup_minhash_lsh", "lsh_recall_ge_90pct"),
     ("dedup_minhash_lsh", "lsh_precision_exact"),

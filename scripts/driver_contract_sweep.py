@@ -116,11 +116,14 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from spark_streaming_practicum_spark.session import driver_memory, host_cpus
+
+    cpus = host_cpus()
     spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", driver_memory(16))
         .getOrCreate()
     )
     con = duckdb.connect()

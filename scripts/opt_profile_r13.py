@@ -22,7 +22,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from spark_streaming_practicum_spark.registry import all_queries
-from spark_streaming_practicum_spark.session import build_session
+from spark_streaming_practicum_spark.session import build_session, driver_memory
 from spark_streaming_practicum_spark.functions.ranks import release_persisted_frames
 
 PLANS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13")
@@ -67,7 +67,7 @@ def main() -> None:
         names = [k for k, _ in sorted(q.items(), key=lambda kv: -kv[1])[:top]]
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", driver_memory(24))
     spark = build_session(app_name="ssp-opt-profile")
     sc = spark.sparkContext
     defs = all_queries()

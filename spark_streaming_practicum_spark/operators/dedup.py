@@ -2401,8 +2401,9 @@ def linkage_symspell_edit1(spark: SparkSession, sf_dir: str) -> DataFrame:
 def symspell_delete_keys(names: DataFrame) -> DataFrame:
     """(t, k) rows: each name t paired with itself and every
     single-deletion variant — the SymSpell blocking keys. Shared by the
-    operator and scripts/symspell_name_probe.py so the probe measures
-    the production plan, not a reimplementation."""
+    operator and the name-distribution probe (scripts/symspell_name_probe.py
+    in git history at 8cabfc2) so the probe measured the production plan,
+    not a reimplementation."""
     return names.select(
         "t",
         F.explode(

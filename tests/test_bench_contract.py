@@ -91,3 +91,18 @@ def test_warmup_failure_exits_nonzero_and_names_query(spark, monkeypatch, capsys
     err = capsys.readouterr().err
     assert "WARMUP FAILED broken_contract_q" in err
     assert "deliberately broken" in err
+
+
+@pytest.mark.parametrize(
+    "sf_dir, sf",
+    [
+        ("/data/testdata/sf0.1", 0.1),
+        ("/data/testdata/sf0.01/", 0.01),
+        ("/tmp/lake", None),
+    ],
+)
+def test_sf_label_from_data_dir(sf_dir, sf):
+    """The scale label is read off the dir name before the session
+    starts; a dir not named ``sf<number>`` (a replicated lake) reports
+    null instead of raising after every query has run."""
+    assert bench.sf_label(sf_dir) == sf

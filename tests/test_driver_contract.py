@@ -10,6 +10,8 @@ import importlib.util
 
 import pytest
 
+from spark_streaming_practicum_spark.registry import all_queries
+
 from .conftest import SF_DIR
 
 SPOT_CHECKS = [
@@ -65,3 +67,14 @@ def test_contract_query_matches_oracle_under_hostile_tz(
 def test_entry_runs_under_hostile_session(entry_mod, hostile_spark):
     rows = entry_mod.entry(hostile_spark).collect()
     assert len(rows) >= 1
+
+
+def test_enumeration_is_head_then_registry(entry_mod):
+    """The driver samples the head of queries(): it must lead with
+    _HEAD and still enumerate every registered query exactly once."""
+    defs = all_queries()
+    assert set(entry_mod._HEAD) <= set(defs)
+    names = list(entry_mod.queries())
+    assert sorted(names) == sorted(defs)
+    assert names[: len(entry_mod._HEAD)] == list(entry_mod._HEAD)
+    assert entry_mod.oracle_sql() == {n: d.oracle for n, d in defs.items() if d.oracle}

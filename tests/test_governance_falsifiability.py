@@ -1,6 +1,7 @@
 """Falsifiability for dq_referential_integrity's ri_ok certificate.
 
-The round-11 mutation pass (scripts/mutation_probe_r12.py) proved that
+The round-11 mutation pass (scripts/mutation_probe_r12.py, in git history
+at 8cabfc2) proved that
 NO code flip can falsify ri_ok on the clean testdata lake — n_orphans
 is 0 under both the correct predicate and a side-swapped one, so the
 strict compare passes either way. The certificate's teeth therefore
