@@ -10,7 +10,10 @@ a previous round's detail map.
 
 from __future__ import annotations
 
+import ast
+import importlib
 import json
+from pathlib import Path
 
 import pytest
 
@@ -106,3 +109,25 @@ def test_sf_label_from_data_dir(sf_dir, sf):
     starts; a dir not named ``sf<number>`` (a replicated lake) reports
     null instead of raising after every query has run."""
     assert bench.sf_label(sf_dir) == sf
+
+
+def test_perfbench_engine_imports_resolve():
+    """Every engine name the frozen benchmark imports, at module level or
+    inside a function, still exists, so a rename fails here and not when
+    the benchmark runs."""
+    package = "spark_streaming_practicum_spark"
+    names = []
+    for path in sorted((Path(bench.__file__).parent / "perfbench").glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(package):
+                names += [(path.name, node.module, a.name) for a in node.names]
+            elif isinstance(node, ast.Import):
+                names += [(path.name, a.name, None) for a in node.names if a.name.startswith(package)]
+    assert any(f == "census.py" and n == "JsonArrayBatchParser" for f, _, n in names)
+    # import_module raises for a module that is gone; hasattr catches a name
+    missing = [
+        (f, m, n)
+        for f, m, n in names
+        if not hasattr(importlib.import_module(m), n or "__name__")
+    ]
+    assert missing == []

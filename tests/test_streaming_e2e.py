@@ -250,3 +250,27 @@ def test_fan_out_sized_from_batch_bytes(spark, dirs):
     assert len(_part_files(dirs["bronze"]) - small_bronze) > 1
     assert len(_part_files(dirs["dead"]) - small_dead) > 1
     assert spark.read.parquet(str(dirs["bronze"])).count() == 12
+
+
+def test_process_batch_builds_expressions_once(spark, dirs, monkeypatch):
+    """The parser, router and observe expressions are built on the first
+    micro-batch a processor routes; later batches build no Column."""
+    import pyspark.sql.functions as F
+
+    calls = []
+    real = F.from_json
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(F, "from_json", counting)
+    proc = _processor(dirs)
+    batch = spark.createDataFrame(
+        [(json.dumps([{"id": "1", "name": "a"}, {"id": "2"}]),)], ["value"]
+    )
+    proc.process_batch(batch, 0)
+    first = len(calls)
+    proc.process_batch(batch, 1)
+    assert first > 0 and len(calls) == first
+    assert [(m.valid_rows, m.dead_letter_rows) for m in proc.metrics] == [(1, 1), (1, 1)]
