@@ -162,6 +162,16 @@ def stream_drain_partitions(spark: SparkSession, n: int = 8):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def memory_sink_frame(spark: SparkSession, sink_name: str) -> DataFrame:
+    """Resolve a drained memory sink's view, then drop the view. The
+    resolved plan holds the sink's ``MemoryPlan``, so the frame still
+    reads the sink's rows, and the session catalog keeps no view per
+    stream run."""
+    df = spark.table(sink_name)
+    spark.catalog.dropTempView(sink_name)
+    return df
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every testdata table as a temp view for spark.sql()."""
     for name in TABLES:

@@ -11,7 +11,9 @@ same total order can be produced with every pass fully parallel:
    tie-breaking column so the order is total);
 2. count rows per partition — a P-row aggregate whose result (P
    integers) is the only driver-side state — and turn the counts into
-   cumulative offsets, broadcast back;
+   cumulative offsets, broadcast back as a P-row ``local_frame``
+   (a ``LocalTableScan``: the merge step costs what its P rows cost,
+   with no Python-worker scan);
 3. global rank = offset + partition-local ``row_number`` (the local
    window needs no exchange: the data is already partitioned by range).
 
@@ -25,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..sources.batch import local_frame
 
 # Persisted intermediates must outlive the helper call (the returned
 # plan reads them when the CALLER materializes it), so they cannot be
@@ -175,7 +179,7 @@ def global_row_number(
     for pid in sorted(sizes):
         offsets.append((pid, acc))
         acc += sizes[pid]
-    off = spark.createDataFrame(offsets or [(0, 0)], "_pid int, _off long")
+    off = local_frame(spark, offsets or [(0, 0)], "_pid int, _off long")
     out = (
         d.join(F.broadcast(off), "_pid")
         .withColumn(rn_name, F.col("_off") + F.col("_lrn"))
@@ -234,7 +238,7 @@ def global_cumulative_sums(
         .withColumn("_pid", F.spark_partition_id())
         .localCheckpoint(eager=False)
     )
-    from decimal import Decimal
+    from decimal import Decimal, localcontext
 
     partial_df = d.groupBy("_pid").agg(*[F.sum(c).alias(c) for c in sum_cols])
     # offsets carry each summed column's OWN result type (long for ints,
@@ -249,15 +253,19 @@ def global_cumulative_sums(
         return 0.0 if t == "double" else 0
 
     offsets, acc = [], {c: _zero(c) for c in sum_cols}
-    for pid in sorted(partials):
-        offsets.append((pid, *[acc[c] for c in sum_cols]))
-        for c in sum_cols:
-            acc[c] += partials[pid][c] or _zero(c)
+    # A decimal(38,s) offset has up to 38 digits; Python's default
+    # context keeps 28 and would round the rest away.
+    with localcontext() as ctx:
+        ctx.prec = 2 * 38
+        for pid in sorted(partials):
+            offsets.append((pid, *[acc[c] for c in sum_cols]))
+            for c in sum_cols:
+                acc[c] += partials[pid][c] or _zero(c)
     schema = "_pid int, " + ", ".join(
         f"_off_{c} {sum_types[c]}" for c in sum_cols
     )
-    off = spark.createDataFrame(
-        offsets or [(0, *[_zero(c) for c in sum_cols])], schema
+    off = local_frame(
+        spark, offsets or [(0, *[_zero(c) for c in sum_cols])], schema
     )
     w = (
         Window.partitionBy("_pid")

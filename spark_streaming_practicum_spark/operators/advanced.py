@@ -16,6 +16,7 @@ from ..catalog import table
 from ..functions.ranks import persisted as _persisted
 from ..functions.textfns import poly_hash
 from ..registry import query
+from ..sources.batch import local_frame
 
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 
@@ -1053,7 +1054,7 @@ def sketch_quantile_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).transform(_persisted)
     n_row = vals.groupBy().agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    qs = spark.createDataFrame([(q,) for q in _QS_QS], "q double")
+    qs = local_frame(spark, [(q,) for q in _QS_QS], "q double")
     targets = qs.crossJoin(F.broadcast(n_row)).select(
         "q", "n", F.ceil(F.col("q") * F.col("n")).cast("bigint").alias("t")
     )
@@ -1580,7 +1581,8 @@ def opt_histogram_selectivity_audit(spark: SparkSession, sf_dir: str) -> DataFra
         .groupBy("bkt")
         .agg(F.min("v").alias("lo"), F.max("v").alias("hi"), F.count(F.lit(1)).alias("n"))
     )
-    preds = o.sparkSession.createDataFrame(
+    preds = local_frame(
+        spark,
         [(lbl, lo, hi) for lbl, lo, hi in _HIST_PREDICATES],
         "label string, plo double, phi double",
     )

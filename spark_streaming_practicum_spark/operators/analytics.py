@@ -19,6 +19,7 @@ from ..catalog import table
 from ..functions.aggs import dsum, dsum_sql
 from ..functions.textfns import poly_hash
 from ..registry import query
+from ..sources.batch import local_frame
 from ..functions.ranks import persisted as _persisted
 
 
@@ -4426,8 +4427,8 @@ def attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dst",
         (F.col("c") * 1.0 / F.sum("c").over(Window.partitionBy("src"))).alias("p"),
     ).unionByName(
-        tr.sparkSession.createDataFrame(
-            [("CONV", "CONV", 1.0)], "src string, dst string, p double"
+        local_frame(
+            spark, [("CONV", "CONV", 1.0)], "src string, dst string, p double"
         )
     )
     # The transition matrix is |channels + 3|^2-bounded BY CONSTRUCTION
@@ -4463,7 +4464,8 @@ def attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         for c, p in results
         if c != "none"
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         sorted(rows),
         "channel string, p_conversion_base double, "
         "p_conversion_removed double, removal_effect double",

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..functions.textfns import poly_hash, shingles, tokens
 from ..registry import query
+from ..sources.batch import local_frame
 from ..functions.ranks import persisted as _persisted
 from .ml import _ASSIGN_SQL as _KM_ASSIGN_SQL
 from .ml import _UPDATE_SQL as _KM_UPDATE_SQL
@@ -874,8 +875,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = base.count()
     B = max(8, -(-n // 4096))
     e = base.withColumn("blk", F.pmod(F.xxhash64("vec_id"), F.lit(B)).cast("int"))
-    block_pairs = spark.createDataFrame(
-        [(i, j) for i in range(B) for j in range(i, B)], "ba int, bb int"
+    block_pairs = local_frame(
+        spark, [(i, j) for i in range(B) for j in range(i, B)], "ba int, bb int"
     )
     left = e.join(
         F.broadcast(block_pairs), e.blk == block_pairs.ba, "inner"
@@ -1852,8 +1853,8 @@ def lsh_parameter_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pure generated relations (divisor frame x 99-point similarity
     grid) — no input tables, constant size, yet the arithmetic is the
     real Leskovec S-curve analysis. sf_dir is unused by design."""
-    combos = spark.createDataFrame(
-        [(b, 128 // b) for b in (2, 4, 8, 16, 32, 64)], "b int, r int"
+    combos = local_frame(
+        spark, [(b, 128 // b) for b in (2, 4, 8, 16, 32, 64)], "b int, r int"
     )
     grid = combos.crossJoin(
         spark.range(1, 100).select((F.col("id") * 0.01).alias("sim"))

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import query
+from ..sources.batch import local_frame
 from ..functions.ranks import persisted as _persisted
 
 _K = 4
@@ -358,8 +359,8 @@ def pca_power_iteration_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    v = spark.createDataFrame(
-        [(j, _PI_V0) for j in range(_PI_D)], "j int, vj double"
+    v = local_frame(
+        spark, [(j, _PI_V0) for j in range(_PI_D)], "j int, vj double"
     )
     wall = Window.partitionBy()
     for _ in range(_PI_ITERS):
@@ -663,8 +664,8 @@ def decision_stump_info_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("bpos").over(wcum).alias("cpos"),
         F.sum("bn").over(wcum).alias("cn"),
     )
-    thr_df = spark.createDataFrame(
-        [(i + 1, float(t)) for i, t in enumerate(thrs)], "i int, t double"
+    thr_df = local_frame(
+        spark, [(i + 1, float(t)) for i, t in enumerate(thrs)], "i int, t double"
     )
     lefts = (
         thr_df.join(F.broadcast(cum), cum.bin <= thr_df.i - 1)
@@ -1945,7 +1946,9 @@ def ml_dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     after runs on the driver over that list (same trade as MMR / the
     Markov matrix): the dense/sparse split, the 9-offset neighbour
     lookup, union-find and the noise row. No persist, no adjacency
-    join, no second aggregation: one collect. Labels are the MIN
+    join, no second aggregation: one collect. The result rows return
+    through ``local_frame``, so the query executes as one
+    ``LocalTableScan`` and starts no Python worker. Labels are the MIN
     positive-encoded cell id per component (union by smaller root) —
     deterministic, so the oracle's recursive-CTE propagation lands on
     identical ids."""
@@ -1988,7 +1991,8 @@ def ml_dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         v[0] += 1
         v[1] += c
     out = [(lab, n, p) for lab, (n, p) in agg.items()] + [(-1, len(sparse), sum(sparse))]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         sorted(out, key=lambda t: (-t[2], t[0])),
         "cluster_id bigint, n_cells bigint, n_points bigint",
     )

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..functions.vector import dot, l2_norm
 from ..registry import query
+from ..sources.batch import local_frame
 from ..functions.ranks import persisted as _persisted
 from ..functions.ranks import unpersist_tracked as _unpersist
 
@@ -738,7 +739,7 @@ def sim_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("mmr_score", T.DoubleType(), False),
         ]
     )
-    return spark.createDataFrame(picked, out_schema).orderBy("rank")
+    return local_frame(spark, picked, out_schema).orderBy("rank")
 
 
 # --- kNN-distance outliers ------------------------------------------------
@@ -996,8 +997,8 @@ def crosslingual_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bt = max(1, -(-nt // _MINE_BLOCK))
     sb = src.withColumn("blk", F.pmod(F.xxhash64("id"), F.lit(Bs)).cast("int"))
     tb = tgt.withColumn("blk", F.pmod(F.xxhash64("id"), F.lit(Bt)).cast("int"))
-    block_pairs = spark.createDataFrame(
-        [(i, j) for i in range(Bs) for j in range(Bt)], "ba int, bb int"
+    block_pairs = local_frame(
+        spark, [(i, j) for i in range(Bs) for j in range(Bt)], "ba int, bb int"
     )
     left = sb.join(F.broadcast(block_pairs), sb.blk == block_pairs.ba).select(
         "ba", "bb", F.lit(0).alias("role"), "id", "emb"

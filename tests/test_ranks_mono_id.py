@@ -10,22 +10,26 @@ sample-seeded per execution, so independent count/output branches can
 disagree on the partitioning), and the persist-retaining version
 measured slower with higher job counts (every consumer re-plans the
 in-DAG offset subtree). The eager helper's P-integer collect is the
-cheap, correct design; these tests pin its invariants.
+cheap, correct design; these tests pin its invariants. The
+cumulative-sum sibling's decimal offsets must keep all 38 digits.
 """
 
 from __future__ import annotations
 
 import re
+from decimal import Decimal
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from spark_streaming_practicum_spark.catalog import table
 from spark_streaming_practicum_spark.functions.ranks import (
+    global_cumulative_sums,
     global_row_number,
     release_persisted_frames,
 )
 from spark_streaming_practicum_spark.plans import formatted_plan
+from spark_streaming_practicum_spark.sources.batch import local_frame
 
 from .conftest import SF_DIR
 
@@ -126,3 +130,15 @@ def test_rank_project_stays_above_sort(spark):
         if any(re.search(rf"\bSort \({s}\)", l) for s in sort_ids)
     )
     assert first_proj < first_sort, (first_proj, first_sort)
+
+
+def test_cumulative_decimal_offsets_keep_every_digit(spark):
+    # 32 significant digits per running sum: more than the 28 that
+    # Python's default decimal context keeps.
+    v = Decimal("10000000000000000000000000.000001")
+    base = local_frame(spark, [(k, v) for k in range(8)], "k int, v decimal(38,6)")
+    out = global_cumulative_sums(base, [F.col("k")], ["v"], partitions=4)
+    got = {r["k"]: r["cum_v"] for r in out.collect()}
+    assert got == {
+        k: Decimal(f"{(k + 1) * 10**25}.{k + 1:06d}") for k in range(8)
+    }
