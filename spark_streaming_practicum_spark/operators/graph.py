@@ -1,22 +1,34 @@
-"""Graph analytics over relational data: fixed-iteration PageRank.
+"""Graph analytics over the nation-to-nation trade graph.
 
-Complements the connected-components operator in ``dedup.py`` (min-label
-propagation) with the other canonical iterative-join graph algorithm.
-The graph is derived relationally — nation-to-nation trade edges from
-customer x orders x lineitem x supplier — so the whole thing stays in
-DataFrame land: one shuffle per iteration, keyed on the destination
-node, which is exactly the Pregel-style message-passing layout that
-scales to billion-edge graphs (GraphX/GraphFrames use the same plan).
+Every ``graph_*`` query but the random walk runs over trade lanes:
+customer nation -> supplier nation, weighted by the number of lineitems
+shipped along the lane. Building the lanes is the data-sized step, a
+``lineitem x orders x customer x supplier`` join and a group-by, and it
+runs distributed, once per query (``_trade_lanes``). Its result lives in
+the TPC-H nation domain: 25 nations, so at most 625 lanes at any scale
+factor.
 
-The reference has no graph surface (it stops at bronze ingest,
-/root/reference/README.md:58-72); this is north-star extension work.
+- Triangles, Jaccard, clustering, Adamic-Adar and the Boruvka round
+  filter or derive from the lanes and stay one lazy plan.
+- The fixpoints (PageRank, label propagation, modularity, SSSP, k-core,
+  topological layers, HITS, Katz) collect the lanes and the 25 nation
+  rows once, iterate in plain Python on the driver, and return through
+  ``sources.batch.local_frame`` (a ``LocalTableScan``). Display rounding
+  and modularity's decimal casts stay Spark expressions over those rows,
+  so they round exactly as the oracles do.
+- The random walk's frontier is customer- and supplier-sized, so it
+  stays a distributed join per hop.
 
-Oracle: the iteration count is FIXED (3), so the recurrence unrolls into
-chained CTEs — the SQL is generated by the same loop that builds the
-DataFrame plan, guaranteeing the two stay in sync.
+The reference has no graph surface (it stops at bronze ingest); this is
+north-star extension work.
+
+Oracles: each fixed iteration count unrolls into chained CTEs, generated
+from the same constants the queries iterate with.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -24,6 +36,55 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..registry import query
 from ..functions.ranks import persisted as _persisted
+from ..sources.batch import local_frame
+
+
+def _trade_lanes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Trade lanes ``(src, dst, w)``: ``w`` (bigint) lineitems shipped
+    from customer nation ``src`` to supplier nation ``dst``. The one
+    data-sized step of every nation-graph query, with both dimension
+    tables broadcast; the result has at most 25 x 25 = 625 rows."""
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
+        .agg(F.count(F.lit(1)).alias("w"))
+    )
+
+
+def _driver_graph(spark: SparkSession, sf_dir: str) -> tuple[list, dict]:
+    """The lanes as ``(src, dst, w)`` tuples (<= 625) and the nations as
+    ``{n_nationkey: n_name}`` (25): the only jobs a fixpoint query runs
+    while it is built."""
+    frames = (
+        _trade_lanes(spark, sf_dir),
+        table(spark, sf_dir, "nation").select("n_nationkey", "n_name"),
+    )
+    lanes, nations = ([tuple(r) for r in df.collect()] for df in frames)
+    return lanes, dict(nations)
+
+
+def _spread(lanes, x: dict, nodes) -> dict:
+    """One message-passing step: ``{v: sum of x[s] * w over lanes
+    (s, v, w) with s in x}`` for every v in ``nodes``."""
+    out = dict.fromkeys(nodes, 0.0)
+    for s, d, w in lanes:
+        if s in x and d in out:
+            out[d] += x[s] * w
+    return out
+
+
+def _per_nation(spark: SparkSession, names: dict, values: dict, ddl: str) -> DataFrame:
+    """``(nation, *values[v])`` for every node v that is a nation, sorted
+    by nation name; ``ddl`` is the row schema."""
+    rows = sorted((names[v], *vals) for v, vals in values.items() if v in names)
+    return local_frame(spark, rows, ddl)
+
 
 _DAMPING = 0.85
 _ITERATIONS = 3
@@ -72,59 +133,23 @@ def _pagerank_oracle() -> str:
 def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank (d=0.85, 3 fixed iterations) over the
     customer-nation -> supplier-nation trade graph, edge weight = number
-    of lineitems shipped along that lane.
+    of lineitems shipped along that lane, normalized per source nation.
 
-    Plan shape per iteration: edges(src,dst,p) join labels on src ->
-    partial-sum on dst -> left join back to the node set. Edge
-    normalization is a window over src (one shuffle, computed once and
-    persisted); each iteration then shuffles only (node, pr) pairs —
-    O(V) rows — plus the edge join keyed on src. On a 1000-executor
-    cluster the edge table is hash-partitioned once and reused every
-    round; node vectors are broadcast-small for most real graphs.
-    The node count is a dimension-table scalar (25 nations), read on the
-    driver exactly like a broadcast dim."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .groupBy(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).cast("double").alias("w"))
-    )
-    enorm = edges.select(
-        "src", "dst", (F.col("w") / F.sum("w").over(Window.partitionBy("src"))).alias("p")
-    ).transform(_persisted)
-    enorm.count()
-
-    n = nation.count()  # 25-row dim: a driver-side scalar, like any broadcast dim
-    nodes = nation.select(F.col("n_nationkey").alias("node"))
-    pr = nodes.withColumn("pr", F.lit(1.0 / n))
+    Runs on the driver over a bounded domain: the 25 nations are the
+    node set and there are at most 625 lanes."""
+    lanes, names = _driver_graph(spark, sf_dir)
+    n = len(names)
+    out_w = Counter()
+    for s, _, w in lanes:
+        out_w[s] += w
+    enorm = [(s, d, w / out_w[s]) for s, d, w in lanes]
+    pr = dict.fromkeys(names, 1.0 / n)
     for _ in range(_ITERATIONS):
-        inflow = (
-            enorm.join(pr, enorm.src == pr.node)
-            .groupBy("dst")
-            .agg(F.sum(F.col("pr") * F.col("p")).alias("inflow"))
-        )
-        pr = nodes.join(inflow, nodes.node == inflow.dst, "left").select(
-            "node",
-            (
-                F.lit((1 - _DAMPING) / n)
-                + F.lit(_DAMPING) * F.coalesce("inflow", F.lit(0.0))
-            ).alias("pr"),
-        )
-    # enorm stays persisted until the caller's action completes (the
-    # bench / driver clear caches between queries); unpersisting here
-    # would force the final plan to recompute all three edge joins.
-    return pr.join(F.broadcast(nation), pr.node == nation.n_nationkey).select(
-        F.col("n_name").alias("nation"), F.round("pr", 6).alias("pagerank")
-    )
+        inflow = _spread(enorm, pr, names)
+        pr = {v: (1 - _DAMPING) / n + _DAMPING * inflow[v] for v in names}
+    return _per_nation(
+        spark, names, {v: (x,) for v, x in pr.items()}, "nation string, pr double"
+    ).select("nation", F.round("pr", 6).alias("pagerank"))
 
 
 _TOPK_PARTNERS = 3
@@ -150,6 +175,39 @@ _TRI_EDGES_SQL = f"""
         SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
         FROM top_lanes)
 """
+
+
+def _topk_trade_und(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The top-k-partner undirected trade graph ``(a, b)``, a < b: each
+    nation keeps its 3 heaviest non-self outbound lanes, so density does
+    not grow with SF (at most 25 x 3 edges)."""
+    lanes = _trade_lanes(spark, sf_dir).filter(F.col("src") != F.col("dst"))
+    rk = Window.partitionBy("src").orderBy(F.col("w").desc(), F.col("dst").asc())
+    return (
+        lanes.withColumn("rk", F.row_number().over(rk))
+        .filter(F.col("rk") <= _TOPK_PARTNERS)
+        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
+        .distinct()
+    )
+
+
+def _triangle_members(und: DataFrame) -> DataFrame:
+    """One ``node`` row per (triangle, corner) of ``und``: the three-way
+    self-join enumerates each triangle once, as a < b < c."""
+    e1, e2, e3 = und.alias("e1"), und.alias("e2"), und.alias("e3")
+    tri = (
+        e1.join(F.broadcast(e2), F.col("e1.b") == F.col("e2.a"))
+        .join(
+            F.broadcast(e3),
+            (F.col("e1.a") == F.col("e3.a")) & (F.col("e2.b") == F.col("e3.b")),
+        )
+        .select(F.col("e1.a").alias("a"), F.col("e1.b").alias("b"), F.col("e2.b").alias("c"))
+    )
+    return (
+        tri.select(F.col("a").alias("node"))
+        .unionAll(tri.select(F.col("b").alias("node")))
+        .unionAll(tri.select(F.col("c").alias("node")))
+    )
 
 
 @query(
@@ -184,43 +242,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph the same plan runs as two shuffle joins keyed on the shared
     edge endpoint, which is the standard distributed triangle-enumeration
     layout (MR "node-iterator")."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-
-    lanes = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    rk = Window.partitionBy("src").orderBy(F.col("w").desc(), F.col("dst").asc())
-    und = (
-        lanes.withColumn("rk", F.row_number().over(rk))
-        .filter(F.col("rk") <= _TOPK_PARTNERS)
-        .select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
-    )
-    e1, e2, e3 = und.alias("e1"), und.alias("e2"), und.alias("e3")
-    tri = (
-        e1.join(F.broadcast(e2), F.col("e1.b") == F.col("e2.a"))
-        .join(
-            F.broadcast(e3),
-            (F.col("e1.a") == F.col("e3.a")) & (F.col("e2.b") == F.col("e3.b")),
-        )
-        .select(F.col("e1.a").alias("a"), F.col("e1.b").alias("b"), F.col("e2.b").alias("c"))
-    )
-    members = (
-        tri.select(F.col("a").alias("node"))
-        .unionAll(tri.select(F.col("b").alias("node")))
-        .unionAll(tri.select(F.col("c").alias("node")))
-    )
+    members = _triangle_members(_topk_trade_und(spark, sf_dir))
     return (
         nation.join(members, nation.n_nationkey == members.node, "left")
         .groupBy(F.col("n_name").alias("nation"))
@@ -282,73 +305,36 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the smaller label — fully deterministic, unlike the textbook
     randomized LPA, so both engines converge to identical communities.
 
-    Per round the plan is edges⋈labels → per-(node, label) weight sum →
-    per-node argmax window — the same O(E) shuffle topology as the
-    PageRank op, with the V-sized label vector as the only iterated
-    state. Edge weights are integer counts, so weight sums never suffer
-    float reordering."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    Runs on the driver over a bounded domain: the 25 nations are the
+    node set and there are at most 625 lanes. Edge weights are integer
+    counts, so weight sums are exact."""
+    lanes, names = _driver_graph(spark, sf_dir)
+    _, lab = _lpa(lanes, names)
+    return _per_nation(
+        spark, names, {v: (c,) for v, c in lab.items()}, "nation string, community bigint"
+    )
 
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .groupBy(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).cast("double").alias("w"))
-    )
-    sym = (
-        edges.select("src", "dst", "w")
-        .unionByName(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
-            )
-        )
-        .groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
-        .transform(_persisted)
-    )
-    sym.count()  # materialize once; every round re-reads the edge set
 
-    lab = nation.select(
-        F.col("n_nationkey").alias("node"), F.col("n_nationkey").alias("label")
-    )
+def _lpa(lanes, names: dict) -> tuple[Counter, dict]:
+    """The symmetrized lane weights ``{(src, dst): w}`` (a self-lane
+    counts twice) and each nation's label after ``_LPA_ROUNDS``
+    synchronous rounds."""
+    sym = Counter()
+    for s, d, w in lanes:
+        sym[s, d] += w
+        sym[d, s] += w
+    lab = {v: v for v in names}
     for _ in range(_LPA_ROUNDS):
-        wsum = (
-            sym.join(lab, sym.src == lab.node)
-            .groupBy(F.col("dst").alias("nbr_node"), "label")
-            .agg(F.sum("w").alias("wsum"))
-        )
-        w = Window.partitionBy("nbr_node").orderBy(
-            F.col("wsum").desc(), F.col("label").asc()
-        )
-        best = (
-            wsum.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("nbr_node", F.col("label").alias("best_label"))
-        )
-        # localCheckpoint per round: `lab` feeds both the message join
-        # and the carry-forward left join — see graph_kcore_peel.
-        lab = (
-            lab.join(best, lab.node == best.nbr_node, "left")
-            .select(
-                "node", F.coalesce("best_label", "label").alias("label")
-            )
-            .localCheckpoint(eager=True)
-        )
-    return (
-        lab.join(F.broadcast(nation), lab.node == nation.n_nationkey)
-        .select(
-            F.col("n_name").alias("nation"),
-            F.col("label").cast("bigint").alias("community"),
-        )
-        .orderBy("nation")
-    )
+        votes = Counter()
+        for (s, d), w in sym.items():
+            if s in lab:
+                votes[d, lab[s]] += w
+        best = {}
+        for (d, label), w in sorted(votes.items()):  # a tie keeps the smaller label
+            if d not in best or w > best[d][0]:
+                best[d] = (w, label)
+        lab = {v: best[v][1] if v in best else label for v, label in lab.items()}
+    return sym, lab
 
 
 @query(
@@ -394,29 +380,7 @@ def graph_link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame
     shuffle on the shared neighbor, exactly the n-gram dedup topology);
     degrees join back on the node key; existing edges anti-join out.
     Every score is an exact integer rational."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    lanes = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    wtop = Window.partitionBy("src").orderBy(F.col("w").desc(), F.col("dst").asc())
-    top_lanes = (
-        lanes.withColumn("rk", F.row_number().over(wtop))
-        .filter(F.col("rk") <= _TOPK_PARTNERS)
-        .select("src", "dst")
-    )
-    und = top_lanes.select(
-        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct()
+    und = _topk_trade_und(spark, sf_dir)
     adj = und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionByName(
         und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
     )
@@ -489,75 +453,30 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     wiring (Q near 0) or found real structure. Running a partition
     WITHOUT scoring it is how bad communities ship.
 
-    Reuses the LPA rounds, then three small aggregates on the edge and
-    degree frames: within-community weight via two node-keyed label
-    joins, per-community degree mass via one more; the quadratic term
-    sums over the handful of communities in DECIMAL."""
-    # Rebuild the LPA pipeline (same deterministic rounds).
-    lpa = graph_label_propagation(spark, sf_dir)
-    nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    comm = lpa.join(F.broadcast(nation), lpa.nation == nation.n_name).select(
-        F.col("n_nationkey").alias("node"), F.col("community").alias("label")
-    )
-
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .groupBy(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).cast("double").alias("w"))
-    )
-    sym = (
-        edges.select("src", "dst", "w")
-        .unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-        )
-        .groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
-        .transform(_persisted)
-    )
-    m2 = sym.agg(F.sum("w").cast("double").alias("m2"))
-    deg = sym.groupBy("src").agg(F.sum("w").cast("double").alias("k"))
-    ca = comm.select(F.col("node").alias("src"), F.col("label").alias("la"))
-    cb = comm.select(F.col("node").alias("dst"), F.col("label").alias("lb"))
-    w_in = (
-        sym.join(F.broadcast(ca), "src")
-        .join(F.broadcast(cb), "dst")
-        .filter(F.col("la") == F.col("lb"))
-        .agg(F.sum("w").cast("double").alias("w_in"))
-    )
-    comm_deg = (
-        deg.join(
-            F.broadcast(comm.select(F.col("node").alias("src"), "label")), "src"
-        )
-        .groupBy("label")
-        .agg(F.sum(F.col("k").cast("decimal(38,6)")).cast("double").alias("kc"))
-    )
-    n_comm = comm.select("label").distinct().count()
+    Runs on the driver over a bounded domain: the 25 nations are the
+    node set and there are at most 625 lanes. One lanes collect serves
+    both the LPA rounds and the score. The per-community degree mass and
+    the quadratic term are summed in DECIMAL by Spark over the per-node
+    rows, as the oracle casts them."""
+    lanes, names = _driver_graph(spark, sf_dir)
+    sym, lab = _lpa(lanes, names)
+    k = Counter()
+    for (s, _), w in sym.items():
+        k[s] += w
+    m2 = float(sum(sym.values()))
+    within = [w for (s, d), w in sym.items() if s in lab and d in lab and lab[s] == lab[d]]
+    w_in = float(sum(within)) if within else None
+    rows = [(lab[v], float(kv), m2, w_in) for v, kv in k.items() if v in lab]
+    a = F.col("kc") / F.col("m2")
     return (
-        comm_deg.crossJoin(F.broadcast(m2))
-        .crossJoin(F.broadcast(w_in))
+        local_frame(spark, rows, "label bigint, k double, m2 double, w_in double")
+        .groupBy("label", "m2", "w_in")
+        .agg(F.sum(F.col("k").cast("decimal(38,6)")).cast("double").alias("kc"))
         .groupBy("m2", "w_in")
-        .agg(
-            F.sum(
-                ((F.col("kc") / F.col("m2")) * (F.col("kc") / F.col("m2"))).cast(
-                    "decimal(38,12)"
-                )
-            )
-            .cast("double")
-            .alias("sum_a2")
-        )
+        .agg(F.sum((a * a).cast("decimal(38,12)")).cast("double").alias("sum_a2"))
         .select(
-            F.lit(n_comm).cast("bigint").alias("n_communities"),
-            F.round(F.col("w_in") / F.col("m2") - F.col("sum_a2"), 6).alias(
-                "modularity"
-            ),
+            F.lit(len(set(lab.values()))).cast("bigint").alias("n_communities"),
+            F.round(F.col("w_in") / F.col("m2") - F.col("sum_a2"), 6).alias("modularity"),
         )
     )
 
@@ -613,64 +532,23 @@ def graph_sssp_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
     after PageRank and connected components.
 
     Costs are INTEGERS (floor-divided), so the min-plus semiring is
-    exact: unlike PageRank's float inflow sums there is no rounding
-    anywhere — MIN is a selection, not an accumulation, and the oracle
-    matches bit-for-bit. Per round: edge join keyed on src + MIN-reduce
-    on dst + left join back, all O(E)+O(V) rows per shuffle — the same
-    Pregel layout as PageRank, with the frontier filter (dist < INF)
-    keeping unreached nodes out of the relax join."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    cost = edges.select(
-        "src", "dst", F.expr(f"{_SSSP_SCALE} div w").alias("c")
-    ).transform(_persisted)
-    cost.count()  # materialize once; every round re-reads it
+    exact: MIN is a selection, not an accumulation, and the oracle
+    matches bit-for-bit. Rounds are synchronous: each relaxes every lane
+    from the previous round's distances.
 
-    d = n.select(
-        F.col("n_nationkey").alias("node"),
-        F.when(F.col("n_nationkey") == 0, F.lit(0))
-        .otherwise(F.lit(_SSSP_INF))
-        .cast("long")
-        .alias("dist"),
-    )
+    Runs on the driver over a bounded domain: the 25 nations are the
+    node set and there are at most 625 lanes."""
+    lanes, names = _driver_graph(spark, sf_dir)
+    cost = [(s, d, _SSSP_SCALE // w) for s, d, w in lanes]
+    dist = {v: 0 if v == 0 else _SSSP_INF for v in names}
     for _ in range(_SSSP_ROUNDS):
-        relax = (
-            cost.join(
-                d.filter(F.col("dist") < _SSSP_INF), cost.src == F.col("node")
-            )
-            .groupBy("dst")
-            .agg(F.min(F.col("dist") + F.col("c")).alias("best"))
-            .withColumnRenamed("dst", "rnode")
-        )
-        # localCheckpoint per relax round: `d` is consumed twice per
-        # round (the frontier filter and the left join), so without
-        # truncation earlier rounds re-evaluate ~2x per level. |V| rows.
-        d = (
-            d.join(relax, d.node == relax.rnode, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("dist"),
-                    F.coalesce(F.col("best"), F.lit(_SSSP_INF).cast("long")),
-                ).alias("dist"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return (
-        d.filter(F.col("dist") < _SSSP_INF)
-        .join(n, d.node == n.n_nationkey)
-        .select(F.col("n_name").alias("nation"), F.col("dist").alias("distance"))
-    )
+        best = {}
+        for s, d, c in cost:
+            if dist.get(s, _SSSP_INF) < _SSSP_INF:
+                best[d] = min(best.get(d, _SSSP_INF), dist[s] + c)
+        dist = {v: min(x, best.get(v, _SSSP_INF)) for v, x in dist.items()}
+    reached = {v: (x,) for v, x in dist.items() if x < _SSSP_INF}
+    return _per_nation(spark, names, reached, "nation string, distance bigint")
 
 
 _KCORE_K = 3
@@ -721,53 +599,18 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget) the k-core — the graph-density filter behind community
     seeding and spam-subgraph pruning.
 
-    Each round: degree count over edges restricted to surviving nodes
-    (two semi-join-shaped membership joins keyed on the endpoints) +
-    a threshold filter — O(E) shuffle per round like PageRank/SSSP,
-    never materializing anything but (node, deg). Survivor sets only
-    shrink, so round r's joins run on a subset of round r-1's edges."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-    )
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().transform(_persisted)
-    sym.count()
-    nodes = sym.select(F.col("src").alias("node")).distinct()
-    deg = None
+    Each round counts every surviving node's lanes to surviving nodes
+    and keeps the nodes with at least k. The node set is the endpoints
+    of non-self lanes. Runs on the driver over a bounded domain: at most
+    25 nations and 625 lanes."""
+    lanes, names = _driver_graph(spark, sf_dir)
+    sym = {(s, d) for s, d, _ in lanes if s != d} | {(d, s) for s, d, _ in lanes if s != d}
+    alive = {s for s, _ in sym}
     for _ in range(_KCORE_ROUNDS):
-        deg = (
-            sym.join(nodes.withColumnRenamed("node", "src"), "src")
-            .join(nodes.select(F.col("node").alias("dst")), "dst")
-            .groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        # localCheckpoint per peel round: `nodes` gates BOTH endpoint
-        # joins next round, so without truncation every earlier round
-        # re-evaluates ~2x per level (same Pregel-superstep fix as
-        # graph_hits_hubs_authorities). |V|-row frame — O(nodes) cost.
-        nodes = (
-            deg.filter(F.col("deg") >= _KCORE_K)
-            .select(F.col("src").alias("node"))
-            .localCheckpoint(eager=True)
-        )
-    return (
-        deg.join(nodes, deg.src == nodes.node)
-        .join(n, F.col("src") == n.n_nationkey)
-        .select(F.col("n_name").alias("nation"), F.col("deg").alias("core_degree"))
-        .orderBy("nation")
-    )
+        deg = Counter(s for s, d in sym if s in alive and d in alive)
+        alive = {v for v, k in deg.items() if k >= _KCORE_K}
+    core = {v: (deg[v],) for v in alive}
+    return _per_nation(spark, names, core, "nation string, core_degree bigint")
 
 
 @query(
@@ -802,95 +645,19 @@ def graph_topo_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (min-plus) — this one is the MAX-PLUS semiring on a DAG, exact
     integer arithmetic, so the oracle matches bit-for-bit.
 
-    Round 13 (guide §2.4/§5.4): the one-edge-hop-per-round Pregel loop
-    ran DEPTH rounds (~25 on this complete trade DAG — 140 Spark jobs,
-    each round a localCheckpoint barrier), all over a frame whose key
-    domain is CLOSED (nationkey: |V| <= 25 at any data scale, so the
-    all-pairs path set is <= |V|^2 = 625 rows by construction). That
-    makes MAX-PLUS PATH DOUBLING the right shape: keep longest-path
-    lengths for every (src, dst) pair and square the relation each
-    round — paths(k+1) = max(paths(k), paths(k) o paths(k)) — which
-    converges in ceil(log2(depth)) + 1 <= 6 rounds instead of depth
-    rounds (measured at sf0.1: 140 -> 44 jobs, 7.07 s -> 3.45 s).
-    layer(v) is then MAX(len) over paths ending at v (a maximal path's
-    start must be a root, else an incoming edge would extend it), 0 for
-    roots. Convergence rides observe() on the same checkpoint action
-    (sum+count of the path set are strictly monotone until fixpoint).
-    The data-sized work — the 4-way join building the DAG — is
-    unchanged and stays one pass. The oracle expresses the same
-    fixpoint as a deduplicating recursive CTE over (node, length)
-    states — bounded by |V| x depth, never path-enumerating."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    dag = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .filter(F.col("c_nationkey") < F.col("s_nationkey"))
-        .select(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .distinct()
-        .transform(_persisted)
-    )
-    dag.count()  # the init branch and the node set share the edge scan
-    nodes = (
-        dag.select(F.col("src").alias("v"))
-        .union(dag.select(F.col("dst").alias("v")))
-        .distinct()
-    )
-    from pyspark.sql import Observation
-
-    # All-pairs longest-path lengths; <= |V|^2 rows by construction
-    # (closed nationkey domain), so every doubling round is a tiny
-    # self-join no matter the data scale.
-    paths = dag.select(
-        "src", "dst", F.lit(1).cast("long").alias("len")
-    ).localCheckpoint(eager=True)
-    prev: tuple | None = None
-    # depth <= |V| - 1 = 24 (acyclic by src < dst), so 6 doublings
-    # (2^6 = 64) always reach the fixpoint; the observe() break fires
-    # earlier on shallow DAGs.
-    for i in range(6):
-        obs = Observation(f"topo_double_{i}")
-        composed = (
-            paths.alias("p")
-            .join(paths.alias("q"), F.col("p.dst") == F.col("q.src"))
-            .select(
-                F.col("p.src").alias("src"),
-                F.col("q.dst").alias("dst"),
-                (F.col("p.len") + F.col("q.len")).alias("len"),
-            )
-        )
-        nxt = (
-            paths.unionByName(composed)
-            .groupBy("src", "dst")
-            .agg(F.max("len").alias("len"))
-            .observe(
-                obs,
-                F.sum("len").alias("tot"),
-                F.count(F.lit(1)).alias("cnt"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        paths = nxt
-        sig = (obs.get["tot"], obs.get["cnt"])
-        if sig == prev:
-            break
-        prev = sig
-    incoming = paths.groupBy(F.col("dst").alias("v")).agg(
-        F.max("len").alias("in_len")
-    )
-    return (
-        nodes.join(incoming, "v", "left")
-        .select(
-            F.col("v").alias("nationkey"),
-            F.coalesce(F.col("in_len"), F.lit(0)).cast("long").alias("layer"),
-        )
-        .orderBy("nationkey")
-    )
+    With src < dst, ascending key order is a topological order: walking
+    the lanes sorted by (src, dst) sees every in-lane of a node before
+    its out-lanes, so one pass fixes every layer. The node set is the
+    endpoints of the DAG. Runs on the driver over a bounded domain: at
+    most 25 nations and 300 lanes with src < dst. The oracle expresses
+    the same fixpoint as a deduplicating recursive CTE over (node,
+    length) states."""
+    lanes, _ = _driver_graph(spark, sf_dir)
+    layer = {}
+    for s, d in sorted({(s, d) for s, d, _ in lanes if s < d}):
+        layer.setdefault(s, 0)
+        layer[d] = max(layer.get(d, 0), layer[s] + 1)
+    return local_frame(spark, sorted(layer.items()), "nationkey int, layer bigint")
 
 
 # --- HITS hubs & authorities -------------------------------------------------
@@ -952,81 +719,27 @@ def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     the OTHER canonical eigenvector ranking, complementing PageRank:
     hubs are nations whose customers buy from authoritative supplier
     nations, mutual recurrence h = W a, a = W^T h, L-inf normalized
-    per half-step, {_HITS_ITER} fixed iterations (unrolled into the
+    per half-step, 2 fixed iterations (``_HITS_ITER``, unrolled into the
     oracle CTEs by the same generator loop).
 
-    Plan shape per half-step: one join keyed on the propagation
-    endpoint + one groupBy — identical message-passing layout to
-    PageRank, so the same Pregel-at-scale story holds (edges shuffle
-    once per step on the message key; the score frame is |V| rows).
-    The L-inf normalizer is a 1-row broadcast, not a sort."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .groupBy(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).cast("double").alias("w"))
-        .transform(_persisted)
-    )
-    nodes = n.select(F.col("n_nationkey").alias("node"))
-    a = nodes.withColumn("a", F.lit(1.0))
-    h = None
+    Runs on the driver over a bounded domain: the 25 nations are the
+    node set and there are at most 625 lanes."""
+    lanes, names = _driver_graph(spark, sf_dir)
+    back = [(d, s, w) for s, d, w in lanes]
+    a = dict.fromkeys(names, 1.0)
     for _ in range(_HITS_ITER):
-        hraw = (
-            nodes.join(
-                edges.join(a, edges.dst == a.node)
-                .groupBy(F.col("src").alias("node"))
-                .agg(F.sum(F.col("w") * F.col("a")).alias("v")),
-                "node",
-                "left",
-            )
-            .select("node", F.coalesce("v", F.lit(0.0)).alias("h"))
-        )
-        hmax = hraw.agg(F.max("h").alias("m"))
-        # localCheckpoint per half-step: the frame is consumed TWICE
-        # (the L-inf normalizer and the next half-step's message join),
-        # so without truncation the plan re-evaluates every earlier
-        # half-step ~2x per level — exponential in iterations. Same
-        # Pregel-superstep pattern as graph_topo_layers; the frame is
-        # |V| rows, so the checkpoint is O(nodes) at any scale.
-        h = (
-            hraw.crossJoin(F.broadcast(hmax))
-            .select("node", (F.col("h") / F.col("m")).alias("h"))
-            .localCheckpoint(eager=True)
-        )
-        araw = (
-            nodes.join(
-                edges.join(h, edges.src == h.node)
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.sum(F.col("w") * F.col("h")).alias("v")),
-                "node",
-                "left",
-            )
-            .select("node", F.coalesce("v", F.lit(0.0)).alias("a"))
-        )
-        amax = araw.agg(F.max("a").alias("m"))
-        a = (
-            araw.crossJoin(F.broadcast(amax))
-            .select("node", (F.col("a") / F.col("m")).alias("a"))
-            .localCheckpoint(eager=True)
-        )
-    return (
-        h.join(a, "node")
-        .join(F.broadcast(n), F.col("node") == F.col("n_nationkey"))
-        .select(
-            F.col("n_name").alias("nation"),
-            F.round("h", 6).alias("hub"),
-            F.round("a", 6).alias("authority"),
-        )
-        .orderBy("nation")
-    )
+        h = _linf(_spread(back, a, names))
+        a = _linf(_spread(lanes, h, names))
+    scores = {v: (h[v], a[v]) for v in names}
+    return _per_nation(
+        spark, names, scores, "nation string, h double, a double"
+    ).select("nation", F.round("h", 6).alias("hub"), F.round("a", 6).alias("authority"))
+
+
+def _linf(x: dict) -> dict:
+    """Every score over the largest one."""
+    m = max(x.values())
+    return {v: s / m for v, s in x.items()}
 
 
 _WALK_P = 1_000_000_007  # hash modulus for the deterministic next-hop draw
@@ -1121,31 +834,6 @@ def graph_random_walk_deterministic(spark: SparkSession, sf_dir: str) -> DataFra
     return hop3.select("c0", "s1", "c2", "s3")
 
 
-def _topk_trade_und(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same top-k-partner undirected nation trade graph as
-    `graph_triangle_count` (canonicalized a<b), rebuilt for queries that
-    need it as an input relation."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    lanes = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    rk = Window.partitionBy("src").orderBy(F.col("w").desc(), F.col("dst").asc())
-    return (
-        lanes.withColumn("rk", F.row_number().over(rk))
-        .filter(F.col("rk") <= _TOPK_PARTNERS)
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-    )
-
-
 @query(
     "graph_clustering_coefficient",
     oracle=f"""
@@ -1185,25 +873,10 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     node-iterator triangle layout plus one keyed degree count — no
     per-node adjacency materialization."""
     nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    und = _topk_trade_und(spark, sf_dir).transform(_persisted)
+    und = _topk_trade_und(spark, sf_dir)
     sym = und.select(F.col("a").alias("node")).unionAll(und.select(F.col("b").alias("node")))
     deg = sym.groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
-    e1, e2, e3 = und.alias("e1"), und.alias("e2"), und.alias("e3")
-    tri = (
-        e1.join(F.broadcast(e2), F.col("e1.b") == F.col("e2.a"))
-        .join(
-            F.broadcast(e3),
-            (F.col("e1.a") == F.col("e3.a")) & (F.col("e2.b") == F.col("e3.b")),
-        )
-        .select(F.col("e1.a").alias("a"), F.col("e1.b").alias("b"), F.col("e2.b").alias("c"))
-    )
-    tri_n = (
-        tri.select(F.col("a").alias("node"))
-        .unionAll(tri.select(F.col("b").alias("node")))
-        .unionAll(tri.select(F.col("c").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("n_tri"))
-    )
+    tri_n = _triangle_members(und).groupBy("node").agg(F.count(F.lit(1)).alias("n_tri"))
     return (
         nation.join(deg, nation.n_nationkey == deg.node, "left")
         .join(tri_n, nation.n_nationkey == tri_n.node, "left")
@@ -1351,41 +1024,18 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     25-node graph with counts-free 0/1 weights, so the fixed-point
     iteration is contractive.
 
-    Plan shape per step: one join keyed on the propagation endpoint +
-    one groupBy — the same Pregel message-passing layout as
-    PageRank/HITS (graph.py) with a |V|-row score frame; the distinct
-    edge aggregate runs once and is reused by every step. No
-    normalization pass means one job fewer per iteration than HITS."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .select(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
-        .distinct()
-        .transform(_persisted)
-    )
-    nodes = n.select(F.col("n_nationkey").alias("node"))
-    x = nodes.withColumn("x", F.lit(1.0))
+    Each distinct lane counts once. Runs on the driver over a bounded
+    domain: the 25 nations are the node set and there are at most 625
+    lanes."""
+    lanes, names = _driver_graph(spark, sf_dir)
+    unit = [(s, d, 1) for s, d, _ in lanes]
+    x = dict.fromkeys(names, 1.0)
     for _ in range(_KATZ_ITER):
-        msgs = (
-            edges.join(x, edges.src == x.node)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("x").alias("v"))
-        )
-        x = nodes.join(msgs, "node", "left").select(
-            "node",
-            (1.0 + F.lit(_KATZ_ALPHA) * F.coalesce("v", F.lit(0.0))).alias("x"),
-        )
-    return (
-        x.join(F.broadcast(n), F.col("node") == F.col("n_nationkey"))
-        .select(F.col("n_name").alias("nation"), F.round("x", 6).alias("katz"))
-        .orderBy("nation")
-    )
+        v = _spread(unit, x, names)
+        x = {n: 1.0 + _KATZ_ALPHA * v[n] for n in names}
+    return _per_nation(
+        spark, names, {n: (k,) for n, k in x.items()}, "nation string, x double"
+    ).select("nation", F.round("x", 6).alias("katz"))
 
 
 # --- Boruvka MST round -----------------------------------------------------------
@@ -1430,30 +1080,16 @@ def graph_mst_boruvka_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     one argmin aggregate per component and the component count at
     least halves (O(log V) rounds total).
 
-    Plan: edge aggregation reuses the trade-join shape of
-    PageRank/HITS/Katz; symmetrization is one LEAST/GREATEST groupBy;
-    the per-node pick is a partial-aggregable argmin (min over a
-    (w, u, v) ordering — same min-struct trick as the ngram draft
-    argmax, no rank window needed at scale, though at 25 nodes the
-    window form reads clearer and plans identically after AQE). At
-    100 TB rounds iterate with a component-label frame exactly like
-    graph_topo_layers' loop."""
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    Plan: the non-self trade lanes (``_trade_lanes``); symmetrization
+    is one LEAST/GREATEST groupBy; the per-node pick is a
+    partial-aggregable argmin (min over a (w, u, v) ordering — same
+    min-struct trick as the ngram draft argmax, no rank window needed at
+    scale). At 100 TB, rounds iterate with a component-label frame."""
     n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    raw = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(F.col("c_nationkey").alias("a"), F.col("s_nationkey").alias("b"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    raw = _trade_lanes(spark, sf_dir).filter(F.col("src") != F.col("dst"))
     und = raw.groupBy(
-        F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-    ).agg(F.sum("cnt").alias("w"))
+        F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
+    ).agg(F.sum("w").alias("w"))
     incident = und.select(F.col("u").alias("node"), "u", "v", "w").unionByName(
         und.select(F.col("v").alias("node"), "u", "v", "w")
     )

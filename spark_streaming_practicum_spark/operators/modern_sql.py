@@ -485,8 +485,10 @@ def sql_scripting_control_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
         BEGIN
           DECLARE budget DOUBLE DEFAULT 1000;
           DECLARE rounds INT DEFAULT 0;
-          WHILE budget < (SELECT AVG(o_totalprice)
-                          FROM parquet.`{sf_dir}/orders.parquet`) DO
+          DECLARE avg_p DOUBLE;
+          SET avg_p = (SELECT AVG(o_totalprice)
+                       FROM parquet.`{sf_dir}/orders.parquet`);
+          WHILE budget < avg_p DO
             SET budget = budget * 2;
             SET rounds = rounds + 1;
           END WHILE;

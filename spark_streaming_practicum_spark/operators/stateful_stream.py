@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import memory_sink_frame, stream_drain_partitions, stream_table
+from ..pbcompat import worker_env
 from ..registry import query
 from ..streaming.stateful import running_user_profile
 
@@ -29,10 +30,9 @@ def stream_stateful_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """True streaming custom stateful operator: per-user running profile
     (count, first/last seen) with explicit GroupState, checked against
     the batch aggregate oracle."""
-    stream = stream_table(spark, sf_dir, "events")
-    out = running_user_profile(stream)
     sink_name = f"profile_{uuid.uuid4().hex[:8]}"
-    with stream_drain_partitions(spark):
+    with worker_env(spark), stream_drain_partitions(spark):
+        out = running_user_profile(stream_table(spark, sf_dir, "events"))
         q = (
             out.writeStream.outputMode("update")
             .format("memory")
@@ -157,26 +157,12 @@ def _run_tws(spark: SparkSession, sf_dir: str, build) -> DataFrame:
     restart survival proven at 10⁶ keys in tests/test_scale_runtime.py),
     single availableNow-style drain into a memory sink. All session
     state is restored afterwards."""
-    import os
-
-    from ..pbcompat import worker_pythonpath
-
-    # The PRE-INIT runner and the TWS workers need protobuf on THEIR
-    # sys.path; sc.environment is captured into the UDF's envVars at
-    # wrap time, so it must be set BEFORE build() constructs the
-    # transformWithStateInPandas node.
-    sc = spark.sparkContext
-    prev_pp = sc.environment.get("PYTHONPATH")
-    extra = worker_pythonpath()
-    sc.environment["PYTHONPATH"] = (
-        extra if not prev_pp else prev_pp + os.pathsep + extra
-    )
-    out = build(stream_table(spark, sf_dir, "events"))
     sink_name = f"tws_{uuid.uuid4().hex[:8]}"
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER)
     try:
-        with stream_drain_partitions(spark):
+        with worker_env(spark), stream_drain_partitions(spark):
+            out = build(stream_table(spark, sf_dir, "events"))
             q = (
                 out.writeStream.outputMode("update")
                 .format("memory")
@@ -192,10 +178,6 @@ def _run_tws(spark: SparkSession, sf_dir: str, build) -> DataFrame:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         else:
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        if prev_pp is None:
-            sc.environment.pop("PYTHONPATH", None)
-        else:
-            sc.environment["PYTHONPATH"] = prev_pp
     return memory_sink_frame(spark, sink_name)
 
 

@@ -26,12 +26,15 @@ module at module level so the bootstrap ALSO runs inside Python workers
 — the worker imports the processor module while unpickling the UDF, and
 every StateMessage_pb2 import in pyspark's state clients is lazy
 (method-local), so the unpickle-time bootstrap always lands first.
+The stateful queries there build and drain inside :func:`worker_env`,
+which gives the spawned runners the protobuf runtime and the package.
 """
 
 from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 _VENDORED = "/usr/lib/google-cloud-sdk/platform/google_appengine"
 
@@ -75,15 +78,41 @@ def ensure_protobuf() -> bool:
 
 
 def worker_pythonpath() -> str:
-    """PYTHONPATH fragment that makes Spark-SPAWNED Python runners
-    protobuf-capable: the vendored runtime plus the sitecustomize shim
-    that waives the gencode version pin at interpreter startup.
+    """PYTHONPATH fragment that makes Spark-SPAWNED Python runners able to
+    run this package's stateful operators: the vendored protobuf runtime,
+    the sitecustomize shim that waives the gencode version pin at
+    interpreter startup, and the package root.
 
-    Needed because the transformWithStateInPandas PRE-INIT driver
-    runner deserializes the UDF with cloudpickle BY VALUE — no repo
-    module import ever runs there, so the in-process bootstrap above
-    cannot reach it; only its environment can. Callers merge this into
-    ``sc.environment["PYTHONPATH"]`` (read at UDF-wrap time), which the
-    JVM passes to every runner it spawns for that UDF."""
-    shim = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_pbshim")
-    return os.pathsep.join([shim, _VENDORED])
+    The protobuf part is needed because the transformWithStateInPandas
+    PRE-INIT driver runner deserializes the UDF with cloudpickle BY
+    VALUE — no repo module import ever runs there, so the in-process
+    bootstrap above cannot reach it; only its environment can. The
+    package root is needed because the state functions are pickled BY
+    REFERENCE, so every worker imports this package: a driver that finds
+    it only through ``sys.path`` (not the worker's working directory or
+    an installed copy) would leave the workers with
+    ``ModuleNotFoundError``."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    return os.pathsep.join(
+        [os.path.join(here, "_pbshim"), _VENDORED, os.path.dirname(here)]
+    )
+
+
+@contextmanager
+def worker_env(spark):
+    """Append :func:`worker_pythonpath` to ``sc.environment["PYTHONPATH"]``
+    for the duration of the block, then restore it. Spark copies
+    ``sc.environment`` into a Python UDF when the UDF is wrapped, and the
+    JVM hands it to every runner it spawns for that UDF, so the block
+    must cover building the stateful operator."""
+    env = spark.sparkContext.environment
+    prev = env.get("PYTHONPATH")
+    extra = worker_pythonpath()
+    env["PYTHONPATH"] = extra if not prev else prev + os.pathsep + extra
+    try:
+        yield
+    finally:
+        if prev is None:
+            env.pop("PYTHONPATH", None)
+        else:
+            env["PYTHONPATH"] = prev

@@ -1,6 +1,7 @@
 """Property tests for the modern-SQL pack's non-oracle-able entry
 (theta sketch estimates) — the oracle-able seven are covered by
-test_oracle_parity.py automatically."""
+test_oracle_parity.py automatically — and a pin on the SQL script's
+build jobs."""
 
 from __future__ import annotations
 
@@ -41,3 +42,21 @@ def test_theta_estimates_within_error_bound(spark, oracle_con):
         assert close(rows[et], exact), (et, rows[et], exact)
     assert close(rows["__union_all__"], exact_union)
     assert close(rows["__view_and_purchase__"], exact_overlap)
+
+
+def test_scripting_loop_reads_orders_once(spark):
+    """The script sets the mean order price once and loops on the
+    variable. Building it runs the script: 33 jobs at sf0.001 through
+    sf0.1 (the average, the loop's statements and the final query, each
+    parquet path read inferring its schema). A WHILE condition that
+    re-scans orders raises the count with every iteration."""
+    sc = spark.sparkContext
+    group = "pin-sql-scripting-build-jobs"
+    sc.setJobGroup(group, "sql_scripting_control_flow build-job pin")
+    try:
+        all_queries()["sql_scripting_control_flow"].fn(spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 33, f"sql_scripting_control_flow build ran {len(jobs)} jobs"

@@ -128,16 +128,6 @@ def test_contiguous_ids_avoid_single_partition_window(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_pagerank_broadcasts_dims_and_reuses_edges(spark):
-    """Dimension lookups broadcast; the normalized edge table is
-    persisted (InMemoryTableScan) so each iteration reuses one shuffle
-    instead of recomputing the 4-way join."""
-    df = DEFS["graph_pagerank_trade"].fn(spark, SF_DIR)
-    plan = formatted_plan(df)
-    assert broadcast_join_count(df) >= 1
-    assert "InMemoryTableScan" in plan or "TableCacheQueryStage" in plan, plan[:3000]
-
-
 def test_scd2_windows_share_one_partitioning(spark):
     """Gaps-and-islands: every window pass and the island aggregation
     partition on user_id (or its subsets), so Catalyst plans exactly ONE

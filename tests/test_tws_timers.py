@@ -14,14 +14,13 @@ The assertions below pin that timing.
 from __future__ import annotations
 
 import json
-import os
 import uuid
 
 import pytest
 
 from pyspark.sql import types as T
 
-from spark_streaming_practicum_spark.pbcompat import ensure_protobuf, worker_pythonpath
+from spark_streaming_practicum_spark.pbcompat import ensure_protobuf, worker_env
 
 SCHEMA = T.StructType(
     [
@@ -57,56 +56,51 @@ def test_event_time_timers_close_sessions(spark, tmp_path):
         ],
     )
 
-    sc = spark.sparkContext
-    prev_pp = sc.environment.get("PYTHONPATH")
-    extra = worker_pythonpath()
-    sc.environment["PYTHONPATH"] = (
-        extra if not prev_pp else prev_pp + os.pathsep + extra
-    )
     prev_prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
     sink = f"timers_{uuid.uuid4().hex[:8]}"
     try:
-        stream = (
-            spark.readStream.schema(SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .json(str(in_dir))
-        )
-        out = session_counts_with_timers(stream)
-        q = (
-            out.writeStream.outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .format("memory")
-            .queryName(sink)
-            .start()
-        )
-        try:
-            q.processAllAvailable()  # wm after b1: 10:05 - 10m = 09:55
-            assert spark.table(sink).count() == 0  # nothing closed yet
+        with worker_env(spark):
+            stream = (
+                spark.readStream.schema(SCHEMA)
+                .option("maxFilesPerTrigger", "1")
+                .json(str(in_dir))
+            )
+            out = session_counts_with_timers(stream)
+            q = (
+                out.writeStream.outputMode("update")
+                .option("checkpointLocation", str(tmp_path / "ckpt"))
+                .format("memory")
+                .queryName(sink)
+                .start()
+            )
+            try:
+                q.processAllAvailable()  # wm after b1: 10:05 - 10m = 09:55
+                assert spark.table(sink).count() == 0  # nothing closed yet
 
-            # batch 2: key a extends its open session at 12:00, which
-            # re-arms a's timer 10:35 -> 12:30 BEFORE expiry evaluation;
-            # the batch-end watermark (11:50) then fires only b's 10:30
-            # timer. If deleteTimer had not removed a's old 10:35 timer,
-            # a would close here too — this assertion pins the re-arm.
-            _write_file(in_dir, "b2.json", [("2024-01-01T12:00:00", "a")])
-            q.processAllAvailable()
-            rows = {
-                (r.k, r.n_events) for r in spark.table(sink).collect()
-            }
-            assert rows == {("b", 1)}, rows
+                # batch 2: key a extends its open session at 12:00, which
+                # re-arms a's timer 10:35 -> 12:30 BEFORE expiry evaluation;
+                # the batch-end watermark (11:50) then fires only b's 10:30
+                # timer. If deleteTimer had not removed a's old 10:35 timer,
+                # a would close here too — this assertion pins the re-arm.
+                _write_file(in_dir, "b2.json", [("2024-01-01T12:00:00", "a")])
+                q.processAllAvailable()
+                rows = {
+                    (r.k, r.n_events) for r in spark.table(sink).collect()
+                }
+                assert rows == {("b", 1)}, rows
 
-            # batch 3: a 13:00 event (other key) pushes the watermark to
-            # 12:50, past a's re-armed 12:30 timer: a's whole 3-event
-            # run closes as ONE session.
-            _write_file(in_dir, "b3.json", [("2024-01-01T13:00:00", "c")])
-            q.processAllAvailable()
-            rows = {
-                (r.k, r.n_events) for r in spark.table(sink).collect()
-            }
-            assert rows == {("b", 1), ("a", 3)}, rows
-        finally:
-            q.stop()
+                # batch 3: a 13:00 event (other key) pushes the watermark to
+                # 12:50, past a's re-armed 12:30 timer: a's whole 3-event
+                # run closes as ONE session.
+                _write_file(in_dir, "b3.json", [("2024-01-01T13:00:00", "c")])
+                q.processAllAvailable()
+                rows = {
+                    (r.k, r.n_events) for r in spark.table(sink).collect()
+                }
+                assert rows == {("b", 1), ("a", 3)}, rows
+            finally:
+                q.stop()
     finally:
         if prev_prov is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -114,7 +108,3 @@ def test_event_time_timers_close_sessions(spark, tmp_path):
             spark.conf.set(
                 "spark.sql.streaming.stateStore.providerClass", prev_prov
             )
-        if prev_pp is None:
-            sc.environment.pop("PYTHONPATH", None)
-        else:
-            sc.environment["PYTHONPATH"] = prev_pp
