@@ -5,6 +5,13 @@ go through ``sources.batch.read_parquet`` so Catalyst gets predicate
 pushdown + column pruning for free; at 100 TB these become
 partitioned/bucketed table scans with the same call sites.
 
+This module is the only one that knows the ``{sf_dir}/{name}.parquet``
+layout. SQL reads go through it too: a query passes ``table(...)``
+frames to ``spark.sql`` as parameters (``spark.sql("... FROM {orders}",
+orders=table(spark, sf_dir, "orders"))``), never a raw parquet-path
+read in the SQL text or a temp view of its own. Streaming queries drain
+into a memory sink through ``drain``.
+
 Schemas come from a per-file memo, not a fresh footer inference per
 read: inference is a Spark job, and an interactive session re-reads the
 same tables in every query. The memo is keyed by the file's inode, size
@@ -17,6 +24,7 @@ stat moving, so directories infer on every read as before.
 from __future__ import annotations
 
 import os
+import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -160,6 +168,24 @@ def stream_drain_partitions(spark: SparkSession, n: int = 8):
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def drain(spark: SparkSession, df: DataFrame, mode: str, prefix: str) -> DataFrame:
+    """Start the streaming ``df`` on a memory sink, drain it
+    synchronously and return the sink's rows (``memory_sink_frame``).
+    The drain runs under ``stream_drain_partitions``, so each
+    micro-batch commits 8 state-store instances per stateful operator
+    instead of 32, the dominant fixed cost of a short stream at bench
+    scale. Purely a runtime sizing: the output is
+    partitioning-invariant."""
+    sink_name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    with stream_drain_partitions(spark):
+        q = df.writeStream.outputMode(mode).format("memory").queryName(sink_name).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    return memory_sink_frame(spark, sink_name)
 
 
 def memory_sink_frame(spark: SparkSession, sink_name: str) -> DataFrame:

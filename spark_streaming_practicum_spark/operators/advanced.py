@@ -130,13 +130,14 @@ def subquery_correlated_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery: orders above their customer's average
     (Catalyst decorrelates this into an aggregate + join)."""
     return spark.sql(
-        f"""
+        """
         SELECT o.o_orderkey, o.o_custkey, o.o_totalprice
-        FROM parquet.`{sf_dir}/orders.parquet` o
+        FROM {orders} o
         WHERE o.o_totalprice >
               (SELECT CAST(SUM(CAST(o2.o_totalprice AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*)
-               FROM parquet.`{sf_dir}/orders.parquet` o2 WHERE o2.o_custkey = o.o_custkey)
-        """
+               FROM {orders} o2 WHERE o2.o_custkey = o.o_custkey)
+        """,
+        orders=table(spark, sf_dir, "orders"),
     )
 
 
@@ -153,15 +154,18 @@ def subquery_correlated_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 def subquery_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nested IN subqueries (planned as semi joins)."""
     return spark.sql(
-        f"""
-        SELECT s_suppkey, s_name
-        FROM parquet.`{sf_dir}/supplier.parquet`
-        WHERE s_nationkey IN (
-            SELECT n_nationkey FROM parquet.`{sf_dir}/nation.parquet`
-            WHERE n_regionkey IN (
-                SELECT r_regionkey FROM parquet.`{sf_dir}/region.parquet`
-                WHERE r_name IN ('ASIA', 'EUROPE')))
         """
+        SELECT s_suppkey, s_name
+        FROM {supplier}
+        WHERE s_nationkey IN (
+            SELECT n_nationkey FROM {nation}
+            WHERE n_regionkey IN (
+                SELECT r_regionkey FROM {region}
+                WHERE r_name IN ('ASIA', 'EUROPE')))
+        """,
+        supplier=table(spark, sf_dir, "supplier"),
+        nation=table(spark, sf_dir, "nation"),
+        region=table(spark, sf_dir, "region"),
     )
 
 
@@ -428,6 +432,7 @@ def sql_over_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     via spark.sql."""
     from ..catalog import register_views
 
+    # Registering the views is what this query demonstrates (B4 parity).
     register_views(spark, sf_dir)
     return spark.sql(
         """

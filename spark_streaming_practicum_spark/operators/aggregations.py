@@ -198,11 +198,12 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS via Spark SQL."""
     return spark.sql(
-        f"""
-        SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
-        FROM parquet.`{sf_dir}/orders.parquet`
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
         """
+        SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
+        FROM {orders}
+        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
+        """,
+        orders=table(spark, sf_dir, "orders"),
     )
 
 

@@ -11,8 +11,9 @@ factor.
 - Triangles, Jaccard, clustering, Adamic-Adar and the Boruvka round
   filter or derive from the lanes and stay one lazy plan.
 - The fixpoints (PageRank, label propagation, modularity, SSSP, k-core,
-  topological layers, HITS, Katz) collect the lanes and the 25 nation
-  rows once, iterate in plain Python on the driver, and return through
+  topological layers, HITS, Katz) collect the lanes once, plus the 25
+  nation rows for every one but topological layers (its output is keyed
+  by nationkey), iterate in plain Python on the driver, and return through
   ``sources.batch.local_frame`` (a ``LocalTableScan``). Display rounding
   and modularity's decimal casts stay Spark expressions over those rows,
   so they round exactly as the oracles do.
@@ -57,15 +58,19 @@ def _trade_lanes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _collect(*frames: DataFrame) -> list[list[tuple]]:
+    """The rows of each bounded frame as tuples on the driver: the only
+    jobs a fixpoint query runs while it is built."""
+    return [[tuple(r) for r in df.collect()] for df in frames]
+
+
 def _driver_graph(spark: SparkSession, sf_dir: str) -> tuple[list, dict]:
     """The lanes as ``(src, dst, w)`` tuples (<= 625) and the nations as
-    ``{n_nationkey: n_name}`` (25): the only jobs a fixpoint query runs
-    while it is built."""
-    frames = (
+    ``{n_nationkey: n_name}`` (25)."""
+    lanes, nations = _collect(
         _trade_lanes(spark, sf_dir),
         table(spark, sf_dir, "nation").select("n_nationkey", "n_name"),
     )
-    lanes, nations = ([tuple(r) for r in df.collect()] for df in frames)
     return lanes, dict(nations)
 
 
@@ -652,7 +657,7 @@ def graph_topo_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     most 25 nations and 300 lanes with src < dst. The oracle expresses
     the same fixpoint as a deduplicating recursive CTE over (node,
     length) states."""
-    lanes, _ = _driver_graph(spark, sf_dir)
+    (lanes,) = _collect(_trade_lanes(spark, sf_dir))
     layer = {}
     for s, d in sorted({(s, d) for s, d, _ in lanes if s < d}):
         layer.setdefault(s, 0)

@@ -115,12 +115,11 @@ def recursive_cte_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/graph.py). The MIN/GROUP BY collapse makes the result
     path-order independent, so it is exactly oracle-able."""
     return spark.sql(
-        _REACH_SQL.format(
-            lineitem=f"parquet.`{sf_dir}/lineitem.parquet`",
-            orders=f"parquet.`{sf_dir}/orders.parquet`",
-            customer=f"parquet.`{sf_dir}/customer.parquet`",
-            supplier=f"parquet.`{sf_dir}/supplier.parquet`",
-        )
+        _REACH_SQL,
+        lineitem=table(spark, sf_dir, "lineitem"),
+        orders=table(spark, sf_dir, "orders"),
+        customer=table(spark, sf_dir, "customer"),
+        supplier=table(spark, sf_dir, "supplier"),
     )
 
 
@@ -140,14 +139,15 @@ def agg_listagg_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     order is total. The WITHIN GROUP sort is per-group, after the hash
     aggregate's shuffle, so it scales with group size, not table size."""
     return spark.sql(
-        f"""
+        """
         SELECT r_name,
                listagg(n_name, ',') WITHIN GROUP (ORDER BY n_name) AS nations,
                COUNT(*)                                            AS n_nations
-        FROM parquet.`{sf_dir}/nation.parquet`
-        JOIN parquet.`{sf_dir}/region.parquet` ON n_regionkey = r_regionkey
+        FROM {nation} JOIN {region} ON n_regionkey = r_regionkey
         GROUP BY r_name
-        """
+        """,
+        nation=table(spark, sf_dir, "nation"),
+        region=table(spark, sf_dir, "region"),
     )
 
 
@@ -172,15 +172,16 @@ def pipe_syntax_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet scan — so this is purely a query-surface feature. Sum rides
     the house DECIMAL(38,6) policy for order-independent hashes."""
     return spark.sql(
-        f"""
-        FROM parquet.`{sf_dir}/lineitem.parquet`
+        """
+        FROM {lineitem}
         |> WHERE l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
            AND l_shipdate < TIMESTAMP '1996-01-01 00:00:00'
         |> EXTEND CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6)) AS rev
         |> AGGREGATE CAST(SUM(rev) AS DOUBLE) AS revenue, COUNT(*) AS n_items
            GROUP BY l_linestatus
         |> ORDER BY l_linestatus
-        """
+        """,
+        lineitem=table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -371,14 +372,15 @@ def sql_udf_net_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
     )
     return spark.sql(
-        f"""
+        """
         SELECT l_returnflag,
                CAST(SUM(CAST(net_revenue(l_extendedprice, l_discount, l_tax)
                              AS DECIMAL(38,6))) AS DOUBLE) AS net_revenue,
                COUNT(*) AS n_items
-        FROM parquet.`{sf_dir}/lineitem.parquet`
+        FROM {lineitem}
         GROUP BY l_returnflag
-        """
+        """,
+        lineitem=table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -401,14 +403,15 @@ def sql_group_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash aggregate + range-partitioned sort as the explicit form, so
     the physical plan (and its scale behavior) is unchanged."""
     return spark.sql(
-        f"""
+        """
         SELECT l_returnflag, l_linestatus,
                COUNT(*) AS n,
                CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sum_qty
-        FROM parquet.`{sf_dir}/lineitem.parquet`
+        FROM {lineitem}
         GROUP BY ALL
         ORDER BY ALL
-        """
+        """,
+        lineitem=table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -439,20 +442,21 @@ def sql_lateral_column_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-dp inputs cast exactly), so the chained rounds are bit-identical
     across engines; the final cast surfaces plain doubles."""
     return spark.sql(
-        f"""
+        """
         WITH chained AS (
             SELECT l_orderkey, l_linenumber,
                    ROUND(CAST(l_extendedprice AS DECIMAL(14,2))
                          * (1 - CAST(l_discount AS DECIMAL(14,2))), 2) AS net,
                    ROUND(net * CAST(l_tax AS DECIMAL(14,2)), 2)        AS tax_amt,
                    ROUND(net + tax_amt, 2)                             AS total
-            FROM parquet.`{sf_dir}/lineitem.parquet`)
+            FROM {lineitem})
         SELECT l_orderkey, l_linenumber,
                CAST(net AS DOUBLE)     AS net,
                CAST(tax_amt AS DOUBLE) AS tax_amt,
                CAST(total AS DOUBLE)   AS total
         FROM chained
-        """
+        """,
+        lineitem=table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -481,23 +485,23 @@ def sql_scripting_control_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ceil(log2(avg/1000)) doublings), so the script's control flow is
     verified against arithmetic, not another loop."""
     return spark.sql(
-        f"""
+        """
         BEGIN
           DECLARE budget DOUBLE DEFAULT 1000;
           DECLARE rounds INT DEFAULT 0;
           DECLARE avg_p DOUBLE;
-          SET avg_p = (SELECT AVG(o_totalprice)
-                       FROM parquet.`{sf_dir}/orders.parquet`);
+          SET avg_p = (SELECT AVG(o_totalprice) FROM {orders});
           WHILE budget < avg_p DO
             SET budget = budget * 2;
             SET rounds = rounds + 1;
           END WHILE;
           SELECT rounds,
                  ROUND(budget, 2) AS final_budget,
-                 (SELECT COUNT(*) FROM parquet.`{sf_dir}/orders.parquet`
+                 (SELECT COUNT(*) FROM {orders}
                   WHERE o_totalprice <= budget) AS n_within;
         END
-        """
+        """,
+        orders=table(spark, sf_dir, "orders"),
     )
 
 
@@ -520,12 +524,11 @@ def sql_pivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface syntax — same two-phase hash aggregate underneath.
     COALESCE pins empty cells to 0 like the CASE form."""
     df = spark.sql(
-        f"""
-        SELECT * FROM (
-          SELECT o_orderstatus, o_orderpriority
-          FROM parquet.`{sf_dir}/orders.parquet`)
-        PIVOT (COUNT(*) FOR o_orderstatus IN ('O' AS o, 'F' AS f, 'P' AS p))
         """
+        SELECT * FROM (SELECT o_orderstatus, o_orderpriority FROM {orders})
+        PIVOT (COUNT(*) FOR o_orderstatus IN ('O' AS o, 'F' AS f, 'P' AS p))
+        """,
+        orders=table(spark, sf_dir, "orders"),
     )
     return df.select(
         "o_orderpriority",
@@ -553,12 +556,13 @@ def sql_unpivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     three rows per input, NOT three scans (the UNION ALL oracle is the
     semantic statement; the physical plan is strictly better)."""
     return spark.sql(
-        f"""
+        """
         SELECT * FROM (
           SELECT l_orderkey, l_linenumber, l_quantity, l_discount, l_tax
-          FROM parquet.`{sf_dir}/lineitem.parquet`)
+          FROM {lineitem})
         UNPIVOT (val FOR metric IN (l_quantity, l_discount, l_tax))
-        """
+        """,
+        lineitem=table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -579,6 +583,7 @@ def sql_parameterized_identifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     an identifier parameter resolves through the catalog, not the
     parser). Binding happens at analysis time, so the plan is
     identical to the literal query the oracle states."""
+    # IDENTIFIER(:tbl) resolves a catalog name, so this query keeps its view.
     table(spark, sf_dir, "orders").createOrReplaceTempView("orders_param_v")
     return spark.sql(
         "SELECT o_orderpriority, COUNT(*) AS n "
@@ -744,7 +749,6 @@ def sql_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     The variable references resolve at analysis time, so the plan is
     IDENTICAL to literal SQL — predicate pushdown into the scan
     included. The oracle inlines the same constants."""
-    table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     spark.sql("DECLARE OR REPLACE VARIABLE price_threshold DOUBLE")
     spark.sql("SET VAR price_threshold = 150000.0")
     spark.sql("DECLARE OR REPLACE VARIABLE date_cutoff TIMESTAMP")
@@ -755,8 +759,9 @@ def sql_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(CASE WHEN o_totalprice > price_threshold THEN 1 ELSE 0 END)
                    AS BIGINT) AS n_above_threshold
-        FROM orders
+        FROM {orders}
         WHERE o_orderdate >= date_cutoff
         GROUP BY o_orderpriority
-        """
+        """,
+        orders=table(spark, sf_dir, "orders"),
     )

@@ -7,12 +7,10 @@ user's highest event count (monotone in stream time)."""
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import memory_sink_frame, stream_drain_partitions, stream_table
+from ..catalog import drain, stream_table
 from ..pbcompat import worker_env
 from ..registry import query
 from ..streaming.stateful import running_user_profile
@@ -30,20 +28,9 @@ def stream_stateful_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """True streaming custom stateful operator: per-user running profile
     (count, first/last seen) with explicit GroupState, checked against
     the batch aggregate oracle."""
-    sink_name = f"profile_{uuid.uuid4().hex[:8]}"
-    with worker_env(spark), stream_drain_partitions(spark):
+    with worker_env(spark):
         out = running_user_profile(stream_table(spark, sf_dir, "events"))
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(sink_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    emitted = memory_sink_frame(spark, sink_name)
+        emitted = drain(spark, out, "update", "profile")
     # Update mode may emit one row per key per micro-batch; the final
     # state has the max count — keep it.
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
@@ -155,30 +142,19 @@ def _run_tws(spark: SparkSession, sf_dir: str, build) -> DataFrame:
     state-store COLUMN FAMILIES, which the default HDFS-backed provider
     lacks — RocksDB is also the provider a 100 TB deployment uses;
     restart survival proven at 10⁶ keys in tests/test_scale_runtime.py),
-    single availableNow-style drain into a memory sink. All session
-    state is restored afterwards."""
-    sink_name = f"tws_{uuid.uuid4().hex[:8]}"
+    one synchronous drain into a memory sink (``catalog.drain``). All
+    session state is restored afterwards."""
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER)
     try:
-        with worker_env(spark), stream_drain_partitions(spark):
+        with worker_env(spark):
             out = build(stream_table(spark, sf_dir, "events"))
-            q = (
-                out.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(sink_name)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+            return drain(spark, out, "update", "tws")
     finally:
         if prev is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         else:
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    return memory_sink_frame(spark, sink_name)
 
 
 def stream_tws_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -16,32 +16,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import memory_sink_frame, stream_drain_partitions, stream_table, table
+from ..catalog import drain, memory_sink_frame, stream_drain_partitions, stream_table, table
 from ..registry import query
-
-
-def _drain(spark: SparkSession, df: DataFrame, mode: str, prefix: str) -> DataFrame:
-    """Start ``df`` on a memory sink, drain it synchronously, return the
-    sink table. All TRUE-streaming queries in this module share this
-    shape; the drain runs under ``stream_drain_partitions`` so each
-    micro-batch commits 8 state-store instances per stateful operator
-    instead of 32 — the dominant fixed cost of the sub-10-second
-    streaming band at bench scale (round-7 verdict task 4). Purely a
-    runtime sizing: output is partitioning-invariant and every query
-    here remains oracle-checked."""
-    sink_name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    with stream_drain_partitions(spark):
-        q = (
-            df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(sink_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return memory_sink_frame(spark, sink_name)
 
 
 @query(
@@ -68,7 +44,7 @@ def stream_tumbling_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("sum_value"))
     )
-    out = _drain(spark, agg, "complete", "tumbling")
+    out = drain(spark, agg, "complete", "tumbling")
     return out.select(
         F.col("w.start").alias("window_start"), "event_type", "n", "sum_value"
     )
@@ -171,7 +147,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     dedup = stream.withWatermark("ts", "40 days").dropDuplicatesWithinWatermark(
         ["user_id", "event_type"]
     )
-    kept = _drain(spark, dedup, "append", "dedup").select(
+    kept = drain(spark, dedup, "append", "dedup").select(
         "user_id", "event_type", "event_id", "ts"
     )
     candidates = table(spark, sf_dir, "events").select(
@@ -230,7 +206,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("sum_value"),
         )
     )
-    return _drain(spark, agg, "complete", "enrich")
+    return drain(spark, agg, "complete", "enrich")
 
 
 @query(
@@ -275,7 +251,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 2 MINUTES")),
         "inner",
     ).select("click_id", "purchase_id", F.col("c_user").alias("user_id"))
-    return _drain(spark, joined, "append", "ssj")
+    return drain(spark, joined, "append", "ssj")
 
 
 @query(
@@ -320,7 +296,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fresh = stream.join(static, "f", "left_anti")
     agg = fresh.groupBy("lang").agg(F.count(F.lit(1)).alias("n_new"))
-    return _drain(spark, agg, "complete", "incdedup")
+    return drain(spark, agg, "complete", "incdedup")
 
 
 @query(
@@ -341,6 +317,8 @@ def stream_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     deltas only."""
     stream = stream_table(spark, sf_dir, "events")
     agg = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    # Not ``drain``: one availableNow batch with a time budget, not
+    # processAllAvailable.
     sink_name = f"updmode_{uuid.uuid4().hex[:8]}"
     with stream_drain_partitions(spark):
         q = (
@@ -441,7 +419,7 @@ def stream_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_conversions")
     )
     return (
-        _drain(spark, agg, "append", "jtw")
+        drain(spark, agg, "append", "jtw")
         .select(F.col("w.start").alias("window_start"), "n_conversions")
         .orderBy("window_start")
     )
@@ -522,7 +500,7 @@ def stream_outer_join_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 2 MINUTES")),
         "left_outer",
     ).select("click_id", F.col("c_user").alias("user_id"), "purchase_id")
-    return _drain(spark, joined, "append", "soj").orderBy("click_id", "purchase_id")
+    return drain(spark, joined, "append", "soj").orderBy("click_id", "purchase_id")
 
 
 @query(
@@ -569,7 +547,7 @@ def stream_session_window_true(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("sum_value"),
         )
     )
-    return _drain(spark, agg, "complete", "sesstrue").select(
+    return drain(spark, agg, "complete", "sesstrue").select(
         "user_id",
         F.col("w.start").alias("session_start"),
         F.col("w.end").alias("session_end"),

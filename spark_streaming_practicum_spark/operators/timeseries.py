@@ -167,16 +167,16 @@ def join_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     window/top-k plan a hand-written DataFrame version produces, so the
     lateral syntax costs nothing at scale. Oracle uses DuckDB's LATERAL
     verbatim."""
-    table(spark, sf_dir, "nation").createOrReplaceTempView("nation")
-    table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(
         """
         SELECT n.n_name, c.c_name, c.c_acctbal
-        FROM nation n, LATERAL (
-            SELECT c_name, c_acctbal FROM customer
+        FROM {nation} n, LATERAL (
+            SELECT c_name, c_acctbal FROM {customer}
             WHERE c_nationkey = n.n_nationkey
             ORDER BY c_acctbal DESC, c_name ASC LIMIT 3) c
-        """
+        """,
+        nation=table(spark, sf_dir, "nation"),
+        customer=table(spark, sf_dir, "customer"),
     )
 
 

@@ -135,12 +135,9 @@ def udtf_sentence_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 idx += 1
 
     spark.udtf.register("sentence_segments", SentenceSegments)
-    table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % 50 == 0
-    ).createOrReplaceTempView("udtf_docs_in")
     return spark.sql(
-        "SELECT s.* FROM udtf_docs_in d, "
-        "LATERAL sentence_segments(d.doc_id, d.text) s"
+        "SELECT s.* FROM {docs} d, LATERAL sentence_segments(d.doc_id, d.text) s",
+        docs=table(spark, sf_dir, "documents").filter(F.col("doc_id") % 50 == 0),
     )
 
 

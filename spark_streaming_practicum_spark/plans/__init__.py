@@ -33,10 +33,6 @@ def broadcast_join_count(df: DataFrame) -> int:
     return _node_count(df, "BroadcastHashJoin")
 
 
-def sort_merge_join_count(df: DataFrame) -> int:
-    return _node_count(df, "SortMergeJoin")
-
-
 def executed_plan(df: DataFrame) -> str:
     """String of the EXECUTED physical plan (runs the query) — the only
     reliable place to see AQE's final plan and codegen stages."""

@@ -40,6 +40,18 @@ def oracle_con():
     con.close()
 
 
+def job_count(spark, group: str, fn) -> int:
+    """Spark jobs run while ``fn()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def pytest_addoption(parser):
     parser.addoption(
         "--run-iceberg",

@@ -33,7 +33,7 @@ from spark_streaming_practicum_spark.catalog import table
 from spark_streaming_practicum_spark.operators import graph
 from spark_streaming_practicum_spark.registry import all_queries
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, job_count
 from .test_oracle_parity import _canon_frame, spark_frame
 
 _NAMES = {
@@ -142,40 +142,24 @@ def test_crafted_lake_exercises_the_edge_cases(spark, lake):
         assert len(_rows(spark, sf_dir, name)) == len(_NAMES), name
 
 
-def _job_count(spark, group: str, fn) -> int:
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("name", FIXPOINTS)
 def test_fixpoint_builds_with_the_lane_collect_only(name, spark):
     """With the schemas memoized, building a fixpoint query runs exactly
-    the jobs of collecting the trade lanes and the nation rows, and the
-    result is rows on the driver: every physical-plan leaf is a
+    the jobs of collecting the trade lanes and, for every fixpoint but
+    topological layers (keyed by nationkey), the nation rows. The result
+    is rows on the driver: every physical-plan leaf is a
     ``LocalTableScan``, so executing it reads no table again."""
     for t in _TABLES:
         table(spark, SF_DIR, t)
-    lanes_and_nations = _job_count(
-        spark,
-        f"pin-{name}-lanes",
-        lambda: (
-            graph._trade_lanes(spark, SF_DIR).collect(),
-            table(spark, SF_DIR, "nation").select("n_nationkey", "n_name").collect(),
-        ),
-    )
+    frames = [graph._trade_lanes(spark, SF_DIR)]
+    if name != "graph_topo_layers":
+        frames.append(table(spark, SF_DIR, "nation").select("n_nationkey", "n_name"))
+    collects = job_count(spark, f"pin-{name}-lanes", lambda: [df.collect() for df in frames])
     out = []
-    built = _job_count(
+    built = job_count(
         spark, f"pin-{name}-build", lambda: out.append(all_queries()[name].fn(spark, SF_DIR))
     )
-    assert built == lanes_and_nations, (
-        f"{name} build ran {built} jobs, the lane collect runs {lanes_and_nations}"
-    )
+    assert built == collects, f"{name} build ran {built} jobs, the lane collect runs {collects}"
     leaves = out[0]._jdf.queryExecution().sparkPlan().collectLeaves()
     kinds = {leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())}
     assert kinds == {"LocalTableScanExec"}, kinds
@@ -187,4 +171,4 @@ def test_graph_module_pins_nothing_and_collects_once():
     src = inspect.getsource(graph)
     assert "localCheckpoint(" not in src
     assert src.count(".collect(") == 1
-    assert ".collect(" in inspect.getsource(graph._driver_graph)
+    assert ".collect(" in inspect.getsource(graph._collect)

@@ -21,7 +21,7 @@ from spark_streaming_practicum_spark.catalog import table
 from spark_streaming_practicum_spark.operators.ml import _DB_ENC, _DB_EPS, _DB_OFF
 from spark_streaming_practicum_spark.registry import all_queries
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, job_count
 
 # cell (cx, cy) -> point count; dense at >= 5
 _CELLS = {
@@ -89,13 +89,9 @@ def test_dbscan_build_job_count_pinned(spark):
     aggregation's shuffle stage and its result). A persist, an adjacency
     join or a separate noise aggregation creeping back raises it."""
     table(spark, SF_DIR, "embeddings")
-    sc = spark.sparkContext
-    group = "pin-dbscan-build-jobs"
-    sc.setJobGroup(group, "ml_dbscan_grid_clusters build-job pin")
-    try:
-        all_queries()["ml_dbscan_grid_clusters"].fn(spark, SF_DIR)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= 2, f"ml_dbscan_grid_clusters build ran {len(jobs)} jobs, expected <= 2"
+    jobs = job_count(
+        spark,
+        "pin-dbscan-build-jobs",
+        lambda: all_queries()["ml_dbscan_grid_clusters"].fn(spark, SF_DIR),
+    )
+    assert jobs <= 2, f"ml_dbscan_grid_clusters build ran {jobs} jobs, expected <= 2"

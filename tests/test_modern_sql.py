@@ -5,9 +5,10 @@ build jobs."""
 
 from __future__ import annotations
 
+from spark_streaming_practicum_spark.catalog import table
 from spark_streaming_practicum_spark.registry import all_queries
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, job_count
 
 
 def test_theta_estimates_within_error_bound(spark, oracle_con):
@@ -46,17 +47,15 @@ def test_theta_estimates_within_error_bound(spark, oracle_con):
 
 def test_scripting_loop_reads_orders_once(spark):
     """The script sets the mean order price once and loops on the
-    variable. Building it runs the script: 33 jobs at sf0.001 through
-    sf0.1 (the average, the loop's statements and the final query, each
-    parquet path read inferring its schema). A WHILE condition that
-    re-scans orders raises the count with every iteration."""
-    sc = spark.sparkContext
-    group = "pin-sql-scripting-build-jobs"
-    sc.setJobGroup(group, "sql_scripting_control_flow build-job pin")
-    try:
-        all_queries()["sql_scripting_control_flow"].fn(spark, SF_DIR)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= 33, f"sql_scripting_control_flow build ran {len(jobs)} jobs"
+    variable. Building it runs the script: 31 jobs at sf0.001 through
+    sf0.1 (the average, the loop's statements and the final query; the
+    orders frame comes from ``catalog.table``, whose schema is memoized).
+    A WHILE condition that re-scans orders raises the count with every
+    iteration."""
+    table(spark, SF_DIR, "orders")
+    jobs = job_count(
+        spark,
+        "pin-sql-scripting-build-jobs",
+        lambda: all_queries()["sql_scripting_control_flow"].fn(spark, SF_DIR),
+    )
+    assert jobs <= 31, f"sql_scripting_control_flow build ran {jobs} jobs"

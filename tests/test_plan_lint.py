@@ -11,19 +11,27 @@ This sweep keeps that true as the query surface grows.
 (True-streaming queries are skipped: constructing them executes the
 stream; their plans are covered by their own e2e tests.)
 
-Two source lints ride along: every parquet read in the package goes
-through ``sources.batch.read_parquet``, the one reader that memoizes
-inferred file schemas, and every DataFrame of driver-side rows goes
-through ``sources.batch.local_frame``, which plans them as a
-``LocalRelation`` instead of a Python-worker RDD scan.
+Source lints ride along:
+- every parquet read in the package goes through
+  ``sources.batch.read_parquet``, the one reader that memoizes inferred
+  file schemas, and SQL text reads no parquet path: it takes
+  ``catalog.table`` frames as ``spark.sql`` parameters;
+- no query registers a temp view of its own, except the two whose point
+  is a catalog name;
+- every DataFrame of driver-side rows goes through
+  ``sources.batch.local_frame``, which plans them as a ``LocalRelation``
+  instead of a Python-worker RDD scan.
 """
 
 from __future__ import annotations
 
+import inspect
 import pathlib
 
 import pytest
 
+from spark_streaming_practicum_spark.catalog import register_views
+from spark_streaming_practicum_spark.operators.modern_sql import sql_parameterized_identifier
 from spark_streaming_practicum_spark.plans import formatted_plan
 from spark_streaming_practicum_spark.registry import all_queries
 
@@ -45,19 +53,36 @@ def test_no_cartesian_product_anywhere(spark):
     assert not offenders, f"unbounded cartesian products in: {offenders}"
 
 
-def _calls_outside_sources_batch(call: str) -> list[str]:
+def _occurrences(text: str) -> dict[str, int]:
+    """``{package-relative path: count}`` of every package file with ``text``."""
     pkg = pathlib.Path(__file__).resolve().parents[1] / "spark_streaming_practicum_spark"
-    return [
-        str(path.relative_to(pkg))
-        for path in pkg.rglob("*.py")
-        if call in path.read_text()
-        and path.relative_to(pkg).as_posix() != "sources/batch.py"
-    ]
+    counts = {path.relative_to(pkg).as_posix(): path.read_text().count(text) for path in pkg.rglob("*.py")}
+    return {path: n for path, n in counts.items() if n}
+
+
+def _calls_outside_sources_batch(call: str) -> list[str]:
+    return sorted(set(_occurrences(call)) - {"sources/batch.py"})
 
 
 def test_parquet_reads_go_through_one_reader():
     offenders = _calls_outside_sources_batch("spark.read.parquet(")
     assert not offenders, f"spark.read.parquet( outside sources/batch.py: {offenders}"
+
+
+def test_sql_reads_no_parquet_path():
+    offenders = _occurrences("parquet.`")
+    assert not offenders, f"parquet.` path reads in SQL text: {offenders}"
+
+
+def test_temp_views_only_where_a_catalog_name_is_the_point():
+    """``catalog.register_views`` (the view-then-SQL entry point) and
+    ``sql_parameterized_identifier`` (``IDENTIFIER(:tbl)`` resolves a
+    catalog name) are the only temp-view registrations."""
+    call = "createOrReplaceTempView("
+    sites = _occurrences(call)
+    assert sites == {"catalog.py": 1, "operators/modern_sql.py": 1}, sites
+    for fn in (register_views, sql_parameterized_identifier):
+        assert call in inspect.getsource(fn), fn.__name__
 
 
 def test_driver_rows_go_through_one_builder():

@@ -10,7 +10,7 @@ from spark_streaming_practicum_spark.catalog import TABLES, table
 from spark_streaming_practicum_spark.plans import formatted_plan
 from spark_streaming_practicum_spark.registry import all_queries
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, job_count
 
 DEFS = all_queries()
 
@@ -114,13 +114,9 @@ def test_gbdt_stump_job_count_pinned(spark):
     test already read them (a cold read adds one inference job)."""
     for t in TABLES:
         table(spark, SF_DIR, t)
-    sc = spark.sparkContext
-    group = "pin-gbdt-stump-jobs"
-    sc.setJobGroup(group, "gbdt_stump_boosting job-count pin")
-    try:
-        DEFS["gbdt_stump_boosting"].fn(spark, SF_DIR).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) == 17, f"gbdt_stump_boosting ran {len(jobs)} jobs, expected 17"
+    jobs = job_count(
+        spark,
+        "pin-gbdt-stump-jobs",
+        lambda: DEFS["gbdt_stump_boosting"].fn(spark, SF_DIR).collect(),
+    )
+    assert jobs == 17, f"gbdt_stump_boosting ran {jobs} jobs, expected 17"
