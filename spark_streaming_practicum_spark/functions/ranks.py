@@ -1,4 +1,5 @@
-"""Distributed global-ranking primitives.
+"""Distributed global-ranking primitives, and the registry of what a
+query pins.
 
 A ``row_number()``/``ntile()`` window with ORDER BY but no PARTITION BY
 plans a single-partition WindowExec: every row in the relation moves to
@@ -21,81 +22,69 @@ This is the DataFrame form of RDD ``zipWithIndex`` and the plan that
 ``training.ids_contiguous_global`` pins in its plan-shape test; the
 helpers here share it with every operator that needs a global total
 order (equi-depth histograms, RFM quartiles, ...).
+
+Pins. A query's intermediates must outlive the query function (the
+returned plan reads them when the CALLER materializes it), so every pin
+in the package goes through one registry here and lives until
+``release_persisted_frames()``. ``persisted`` records the frame,
+``checkpointed`` only the checkpoint's RDD id (an unreachable checkpoint
+is still freed by the ContextCleaner), and ``memoized`` holds frames
+shared across queries. Release only when done with every frame built
+since the last release: a frame that reads a released pin cannot be
+collected again. localCheckpoint truncates the lineage and cannot be
+evicted into a recompute, but its blocks live only on the executors
+that wrote them, so a lost executor fails the job instead of
+recomputing.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable, Hashable
+
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.batch import local_frame
 
-# Persisted intermediates must outlive the helper call (the returned
-# plan reads them when the CALLER materializes it), so they cannot be
-# unpersisted before returning. Operator persists routed through
-# ``persisted`` are bounded here: a FIFO of live persisted frames. Each
-# new invocation evicts the oldest entries beyond the cap, so a
-# 350+-query sweep accumulates at most _MAX_LIVE cached frames instead
-# of hundreds. The cap is generous vs. the heaviest composite caller
-# (rfm_customer_segments persists four frames per invocation), so a
-# query's own frames are never evicted before its output materializes —
-# and even if they were, the plan recomputes, losing only speed.
-#
-# The rank helpers below (global_row_number and the cumulative sums) no
-# longer persist: they pin with ``localCheckpoint(eager=False)``, which
-# this FIFO does not track. Those blocks are freed only when the JVM
-# garbage-collects the checkpointed RDD, so release_persisted_frames()
-# and _MAX_LIVE do NOT bound their storage in a long-lived session.
-_live_persisted: list[DataFrame] = []
-_MAX_LIVE = 8
-
-
-def _track_persisted(df: DataFrame) -> DataFrame:
-    _live_persisted.append(df)
-    while len(_live_persisted) > _MAX_LIVE:
-        _live_persisted.pop(0).unpersist(blocking=False)
-    return df
+_persisted_frames: list[DataFrame] = []
+_checkpoint_rdds: list[tuple[SparkContext, int]] = []
+_memo: dict[Hashable, DataFrame] = {}
 
 
 def persisted(df: DataFrame) -> DataFrame:
-    """Chain-friendly ``df.persist()`` routed through the bounded FIFO —
-    ``df.transform(persisted)`` instead of ``df.persist()``.
-
-    Operator-level persists used to rely on the bench/driver clearing
-    caches between queries; in a LONG-LIVED session a multi-query sweep
-    would accumulate storage memory without bound (round-3 advice).
-    Routing every operator persist here caps live cached frames at
-    ``_MAX_LIVE``; evicting a frame an un-materialized plan still
-    references merely recomputes it (speed, not correctness). Frames a
-    query unpersists itself (iterative loops) may be evicted again —
-    ``unpersist`` on a cold frame is a no-op, so double release is
-    harmless."""
-    return _track_persisted(df.persist())
+    """``df.persist()``, freed by the next release; chain it as
+    ``df.transform(persisted)``."""
+    _persisted_frames.append(df.persist())
+    return df
 
 
-def unpersist_tracked(df: DataFrame) -> None:
-    """Unpersist a frame AND remove it from the FIFO's live list.
+def checkpointed(df: DataFrame, eager: bool) -> DataFrame:
+    """``df.localCheckpoint(eager)``, its RDD freed by the next release;
+    chain it as ``df.transform(checkpointed, eager=...)``."""
+    cp = df.localCheckpoint(eager=eager)
+    rdd_id = cp._jdf.queryExecution().analyzed().rdd().id()
+    _checkpoint_rdds.append((df.sparkSession.sparkContext, rdd_id))
+    return cp
 
-    Iterative loops that release a superseded frame with a bare
-    ``df.unpersist()`` leave its (dead) entry occupying a FIFO slot, so
-    a loop of r rounds pushes r dead entries and evicts frames the
-    query STILL NEEDS (e.g. the edge frame a connected-components loop
-    re-joins every round) — each later round then recomputes that
-    lineage from scratch. Caught by bench --compare in round 4:
-    dedup_cluster_representatives 2.1 s -> 5.8 s after the FIFO
-    routing; this restores the loop's cache behavior while keeping the
-    bounded-cache policy for frames nobody releases."""
-    df.unpersist(blocking=False)
-    try:
-        _live_persisted.remove(df)
-    except ValueError:
-        pass
+
+def memoized(key: Hashable, build: Callable[[], DataFrame]) -> DataFrame:
+    """``build()``, called once per ``key`` until the next release."""
+    if key not in _memo:
+        _memo[key] = build()
+    return _memo[key]
 
 
 def release_persisted_frames() -> None:
-    """Drop every helper-persisted frame (test/bench teardown hook)."""
-    while _live_persisted:
-        _live_persisted.pop().unpersist(blocking=False)
+    """Free every pin recorded since the last release."""
+    while _persisted_frames:
+        _persisted_frames.pop().unpersist(blocking=False)
+    for sc, rdd_id in _checkpoint_rdds:
+        rdd = sc._jsc and sc._jsc.getPersistentRDDs().get(rdd_id)  # no _jsc once stopped
+        if rdd is not None:
+            rdd.unpersist(False)
+    _checkpoint_rdds.clear()
+    _memo.clear()
 
 
 def _with_local_rank(
@@ -170,7 +159,7 @@ def global_row_number(
     """
     spark = df.sparkSession
     P = partitions or spark.sparkContext.defaultParallelism
-    d = _with_local_rank(df, order_exprs, P).localCheckpoint(eager=False)
+    d = checkpointed(_with_local_rank(df, order_exprs, P), eager=False)
     sizes = {
         r["_pid"]: r["n"]
         for r in d.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -236,7 +225,7 @@ def global_cumulative_sums(
     d = (
         df.repartitionByRange(P, *order_exprs)
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .transform(checkpointed, eager=False)
     )
     from decimal import Decimal, localcontext
 

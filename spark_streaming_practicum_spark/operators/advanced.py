@@ -429,12 +429,12 @@ def histogram_fixed_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sql_over_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B4 parity (reference .duckdbrc:19-26): the view-then-SQL entry
     point — tables registered as temp views, query expressed in pure SQL
-    via spark.sql."""
-    from ..catalog import register_views
+    via spark.sql. The views are dropped once the plan is analysed."""
+    from ..catalog import TABLES, register_views
 
     # Registering the views is what this query demonstrates (B4 parity).
     register_views(spark, sf_dir)
-    return spark.sql(
+    df = spark.sql(
         """
         SELECT n.n_name,
                COUNT(*) AS n_customers,
@@ -443,6 +443,9 @@ def sql_over_views(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY n.n_name
         """
     )
+    for name in TABLES:
+        spark.catalog.dropTempView(name)
+    return df
 
 
 CMS_DEPTH = 4

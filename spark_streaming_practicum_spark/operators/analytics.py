@@ -239,11 +239,11 @@ def basket_part_pairs_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT c.c_custkey,
                MAX(o.o_orderdate) AS last_order,
                COUNT(*) AS frequency,
-               CAST(SUM(CAST(o.o_totalprice AS DECIMAL(38,6))) AS DOUBLE)
-                   AS monetary
+               SUM(CAST(o.o_totalprice AS DECIMAL(38,6))) AS monetary
         FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
         GROUP BY c.c_custkey)
-    SELECT c_custkey, last_order, frequency, ROUND(monetary, 2) AS monetary,
+    SELECT c_custkey, last_order, frequency,
+           ROUND(CAST(monetary AS DOUBLE), 2) AS monetary,
            NTILE(4) OVER (ORDER BY last_order DESC, c_custkey) AS r_quartile,
            NTILE(4) OVER (ORDER BY frequency DESC, c_custkey)  AS f_quartile,
            NTILE(4) OVER (ORDER BY monetary DESC, c_custkey)   AS m_quartile
@@ -261,14 +261,12 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Round 13: the three quartiles share ONE ranking pass instead of
     three. The rollup is melted to (c_custkey, mid, val) — 3N rows,
-    with each metric mapped to DOUBLE — and ranked once by
+    with each metric mapped to DECIMAL(38,6) — and ranked once by
     (mid, val DESC, c_custkey). Recency (unix_micros) and frequency are
-    integers < 2^53, so their cast is injective and order-exact.
-    Monetary is not: it is a DECIMAL(38,6) sum cast to double, and two
-    distinct sums can collide. It stays oracle-exact only because the
-    order is consistent: both engines rank the identical double cast,
-    and c_custkey breaks the resulting ties the same way. Every
-    metric contributes exactly N rows (the rollup has no NULLs by
+    integers, and monetary is the exact DECIMAL(38,6) sum, so every
+    cast is injective and order-exact: two sums that collide as doubles
+    still rank apart. Only the output column is the rounded double.
+    Every metric contributes exactly N rows (the rollup has no NULLs by
     construction: inner join, then MAX/COUNT/SUM over >=1 order), so
     the within-metric rank is global_rn - mid*N and NTILE(4) is the
     same map-side expression as before. One range exchange + one
@@ -287,7 +285,7 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.max("o_orderdate").alias("last_order"),
             F.count(F.lit(1)).alias("frequency"),
-            F.sum(F.col("o_totalprice").cast("decimal(38,6)")).cast("double").alias("monetary"),
+            F.sum(F.col("o_totalprice").cast("decimal(38,6)")).alias("monetary"),
         )
         .transform(_persisted)
     )
@@ -296,7 +294,7 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         return base.select(
             "c_custkey",
             F.lit(mid).alias("mid"),
-            value.cast("double").alias("val"),
+            value.cast("decimal(38,6)").alias("val"),
         )
 
     melted = (
@@ -320,7 +318,7 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey",
         "last_order",
         "frequency",
-        F.round("monetary", 2).alias("monetary"),
+        F.round(F.col("monetary").cast("double"), 2).alias("monetary"),
         "r_quartile",
         "f_quartile",
         "m_quartile",

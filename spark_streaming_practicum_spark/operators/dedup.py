@@ -27,7 +27,7 @@ from ..catalog import table
 from ..functions.textfns import poly_hash, shingles, tokens
 from ..registry import query
 from ..sources.batch import local_frame
-from ..functions.ranks import persisted as _persisted
+from ..functions.ranks import checkpointed, memoized, persisted as _persisted
 from .ml import _ASSIGN_SQL as _KM_ASSIGN_SQL
 from .ml import _UPDATE_SQL as _KM_UPDATE_SQL
 
@@ -91,30 +91,17 @@ def dedup_keep_first_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # set and the exact certificate slice are pure functions of (lake, code
 # version), so computing them once per session is the honest cost
 # model, and at 100 TB it is the only sane one (nobody re-shingles the
-# corpus per audit query). Frames are materialized with localCheckpoint:
-# unlike persist(), checkpoint blocks are NOT tracked by the
-# CacheManager, so the cross-query `spark.catalog.clearCache()` hygiene
-# in bench/tests can't evict them, and lineage truncation keeps
-# downstream plans from re-running the upstream joins. Keyed by
-# applicationId so a fresh session (fresh code, fresh lake) never sees
-# a stale frame. All memoized frames are small: shingles are
-# O(corpus tokens) and pair sets are O(true near-dup pairs). The store
-# is FIFO-bounded: a long-lived session sweeping many lakes (the scale
-# probes do exactly this) must not pin every lake's checkpoint blocks —
-# dropping the dict reference lets the ContextCleaner reclaim them.
-_SESSION_MEMO_CAP = 12
-_session_memo_store: dict[tuple[str, str, str], DataFrame] = {}
-
-
+# corpus per audit query). Frames are checkpointed eagerly, so
+# downstream plans read a leaf instead of re-running the upstream
+# joins. Entries are keyed by applicationId, so a fresh session (fresh
+# code, fresh lake) never sees a stale frame, and they live in the pin
+# registry (functions/ranks.py): release_persisted_frames() empties the
+# memo and frees the checkpoints, so the next query rebuilds them.
 def _session_memo(spark: SparkSession, sf_dir: str, tag: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    cached = _session_memo_store.get(key)
-    if cached is None:
-        cached = build().localCheckpoint(eager=True)
-        _session_memo_store[key] = cached
-        while len(_session_memo_store) > _SESSION_MEMO_CAP:
-            _session_memo_store.pop(next(iter(_session_memo_store)))
-    return cached
+    return memoized(
+        (spark.sparkContext.applicationId, sf_dir, tag),
+        lambda: checkpointed(build(), eager=True),
+    )
 
 
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -985,7 +972,7 @@ def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
             pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
         )
         .repartition(n_parts, "doc_b")
-        .localCheckpoint(eager=True)
+        .transform(checkpointed, eager=True)
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
@@ -997,7 +984,7 @@ def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
     labels = (
         edge_docs.repartition(n_parts, "doc_id")
         .withColumn("root", F.col("doc_id"))
-        .localCheckpoint(eager=True)
+        .transform(checkpointed, eager=True)
     )
 
     from pyspark.sql import Observation
@@ -1026,7 +1013,7 @@ def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.sum((F.col("old_root") != F.col("root")).cast("long")).alias("n_changed"),
             )
             .drop("old_root")
-            .localCheckpoint(eager=True)
+            .transform(checkpointed, eager=True)
         )
         changed = obs.get["n_changed"] or 0
         labels = new_labels

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..registry import query
 from ..sources.batch import local_frame
-from ..functions.ranks import persisted as _persisted
+from ..functions.ranks import checkpointed, persisted as _persisted
 
 _K = 4
 
@@ -1774,11 +1774,9 @@ def gbdt_stump_boosting(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("sq"),
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpointed, eager=False)
     )
-    f0 = cells.agg((F.sum("sy") / F.sum("n")).alias("f0")).localCheckpoint(
-        eager=False
-    )
+    f0 = checkpointed(cells.agg((F.sum("sy") / F.sum("n")).alias("f0")), eager=False)
     thrs = (
         cells.select(F.col("x1").alias("thr"))
         .union(cells.select("x2"))
@@ -1820,7 +1818,7 @@ def gbdt_stump_boosting(spark: SparkSession, sf_dir: str) -> DataFrame:
     r1 = cells.crossJoin(F.broadcast(f0)).select(
         "x1", "x2", "n", "sy", "sq", (F.col("sy") - F.col("f0") * F.col("n")).alias("r")
     )
-    b1 = best_stump(r1).localCheckpoint(eager=False)
+    b1 = checkpointed(best_stump(r1), eager=False)
 
     def side(b_prefix, x1c, x2c):
         v = F.when(F.col(f"{b_prefix}.feat") == 1, x1c).otherwise(x2c)
@@ -1839,10 +1837,10 @@ def gbdt_stump_boosting(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sq",
             (F.col("f0") + side("b1", F.col("x1"), F.col("x2"))).alias("pred1"),
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpointed, eager=False)
     )
     r2r = r2.withColumn("r", F.col("sy") - F.col("pred1") * F.col("n"))
-    b2 = best_stump(r2r).localCheckpoint(eager=False)
+    b2 = checkpointed(best_stump(r2r), eager=False)
     final = (
         r2.crossJoin(F.broadcast(b2.alias("b2")))
         .select(

@@ -371,7 +371,7 @@ def sql_udf_net_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         RETURN ext * (1 - disc) * (1 + tax)
         """
     )
-    return spark.sql(
+    df = spark.sql(
         """
         SELECT l_returnflag,
                CAST(SUM(CAST(net_revenue(l_extendedprice, l_discount, l_tax)
@@ -382,6 +382,8 @@ def sql_udf_net_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         """,
         lineitem=table(spark, sf_dir, "lineitem"),
     )
+    spark.sql("DROP TEMPORARY FUNCTION net_revenue")  # the plan keeps it inlined
+    return df
 
 
 @query(
@@ -583,14 +585,16 @@ def sql_parameterized_identifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     an identifier parameter resolves through the catalog, not the
     parser). Binding happens at analysis time, so the plan is
     identical to the literal query the oracle states."""
-    # IDENTIFIER(:tbl) resolves a catalog name, so this query keeps its view.
+    # IDENTIFIER(:tbl) resolves a catalog name: a view until the plan is analysed.
     table(spark, sf_dir, "orders").createOrReplaceTempView("orders_param_v")
-    return spark.sql(
+    df = spark.sql(
         "SELECT o_orderpriority, COUNT(*) AS n "
         "FROM IDENTIFIER(:tbl) WHERE o_totalprice > :floor "
         "GROUP BY o_orderpriority",
         args={"tbl": "orders_param_v", "floor": 100000},
     )
+    spark.catalog.dropTempView("orders_param_v")
+    return df
 
 
 # --- MATCH_RECOGNIZE emulation (row-pattern matching) ------------------------
@@ -753,7 +757,7 @@ def sql_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql("SET VAR price_threshold = 150000.0")
     spark.sql("DECLARE OR REPLACE VARIABLE date_cutoff TIMESTAMP")
     spark.sql("SET VAR date_cutoff = TIMESTAMP '1996-01-01 00:00:00'")
-    return spark.sql(
+    df = spark.sql(
         """
         SELECT o_orderpriority,
                CAST(COUNT(*) AS BIGINT) AS n,
@@ -765,3 +769,6 @@ def sql_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
         """,
         orders=table(spark, sf_dir, "orders"),
     )
+    spark.sql("DROP TEMPORARY VARIABLE price_threshold")
+    spark.sql("DROP TEMPORARY VARIABLE date_cutoff")
+    return df

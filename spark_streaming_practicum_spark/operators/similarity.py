@@ -23,7 +23,6 @@ from ..functions.vector import dot, l2_norm
 from ..registry import query
 from ..sources.batch import local_frame
 from ..functions.ranks import persisted as _persisted
-from ..functions.ranks import unpersist_tracked as _unpersist
 
 QUERY_VEC_ID = 0
 TOP_K = 20
@@ -730,7 +729,7 @@ def sim_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         top = scored.orderBy(F.col("mmr").desc(), "vec_id").limit(1).collect()[0]
         picked.append((rank, top["vec_id"], float(top["rel"]), float(top["mmr"])))
         selected.append((top["vec_id"], list(top["e"]), _seq_norm(list(top["e"]))))
-    _unpersist(cands)
+    cands.unpersist()  # the result is driver rows: nothing reads cands again
     out_schema = T.StructType(
         [
             T.StructField("rank", T.IntegerType(), False),

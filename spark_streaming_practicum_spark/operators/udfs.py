@@ -135,10 +135,12 @@ def udtf_sentence_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 idx += 1
 
     spark.udtf.register("sentence_segments", SentenceSegments)
-    return spark.sql(
+    df = spark.sql(
         "SELECT s.* FROM {docs} d, LATERAL sentence_segments(d.doc_id, d.text) s",
         docs=table(spark, sf_dir, "documents").filter(F.col("doc_id") % 50 == 0),
     )
+    spark.sql("DROP TEMPORARY FUNCTION sentence_segments")  # the plan keeps the UDTF
+    return df
 
 
 @query(

@@ -8,6 +8,7 @@ import duckdb
 import pytest
 
 from spark_streaming_practicum_spark.catalog import TABLES
+from spark_streaming_practicum_spark.functions.ranks import release_persisted_frames
 from spark_streaming_practicum_spark.session import build_session
 
 import os
@@ -86,3 +87,11 @@ def built_query(name: str, spark, sf_dir: str | None = None):
     if key not in _PLAN_CACHE:
         _PLAN_CACHE[key] = all_queries()[name].fn(spark, sf_dir or SF_DIR)
     return _PLAN_CACHE[key]
+
+
+def release_pins() -> None:
+    """Free every pin the session's queries made and forget the built
+    plans: a cached plan that reads a released checkpoint can no longer
+    be collected."""
+    release_persisted_frames()
+    _PLAN_CACHE.clear()

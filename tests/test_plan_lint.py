@@ -20,7 +20,10 @@ Source lints ride along:
   is a catalog name;
 - every DataFrame of driver-side rows goes through
   ``sources.batch.local_frame``, which plans them as a ``LocalRelation``
-  instead of a Python-worker RDD scan.
+  instead of a Python-worker RDD scan;
+- every pin goes through the registry in ``functions/ranks.py``, so
+  ``release_persisted_frames()`` frees it. The consumer's per-batch
+  persist is the one exception: it unpersists in ``finally``.
 """
 
 from __future__ import annotations
@@ -31,9 +34,11 @@ import pathlib
 import pytest
 
 from spark_streaming_practicum_spark.catalog import register_views
+from spark_streaming_practicum_spark.functions.ranks import checkpointed, persisted
 from spark_streaming_practicum_spark.operators.modern_sql import sql_parameterized_identifier
 from spark_streaming_practicum_spark.plans import formatted_plan
 from spark_streaming_practicum_spark.registry import all_queries
+from spark_streaming_practicum_spark.streaming.processor import StreamProcessor
 
 from .conftest import SF_DIR, built_query
 
@@ -88,3 +93,14 @@ def test_temp_views_only_where_a_catalog_name_is_the_point():
 def test_driver_rows_go_through_one_builder():
     offenders = _calls_outside_sources_batch("createDataFrame(")
     assert not offenders, f"createDataFrame( outside sources/batch.py: {offenders}"
+
+
+def test_pins_go_through_the_registry():
+    allowed = {
+        "functions/ranks.py": inspect.getsource(persisted) + inspect.getsource(checkpointed),
+        "streaming/processor.py": inspect.getsource(StreamProcessor.process_batch),
+    }
+    for call in (".persist(", ".cache(", ".localCheckpoint("):
+        sites = _occurrences(call)
+        offenders = {path: n for path, n in sites.items() if n != allowed.get(path, "").count(call)}
+        assert not offenders, f"{call} outside the pin registry: {offenders}"

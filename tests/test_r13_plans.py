@@ -10,7 +10,7 @@ from spark_streaming_practicum_spark.catalog import TABLES, table
 from spark_streaming_practicum_spark.plans import formatted_plan
 from spark_streaming_practicum_spark.registry import all_queries
 
-from .conftest import SF_DIR, job_count
+from .conftest import SF_DIR, job_count, release_pins
 
 DEFS = all_queries()
 
@@ -38,6 +38,7 @@ def test_ab_permutation_single_char_fold(spark):
     plan — pre-rework each of the 50 replicates re-folded the prefixed
     string per referencing aggregate. The melt's explode must be
     present (narrow aggregate instead of the 201-buffer wide one)."""
+    release_pins()  # an earlier build's persisted frame would replace this build's subtree
     df = DEFS["ab_permutation_test"].fn(spark, SF_DIR)
     plan = formatted_plan(df)
     n_folds = len(re.findall(r"\baggregate\(split\(", plan))

@@ -1,22 +1,14 @@
-"""Round-12 optimization guard: the mono-id local index inside the
-two-pass global ranking must be bit-equivalent to a reference
-``row_number()`` window, and the plan must stay free of the shapes the
-rework removed (Window operator; the full-width hashpartitioning(_pid)
-exchange that fed it).
-
-A collect-free "lazy" sibling was built and rejected this round: a
-persist-free version is WRONG (repartitionByRange bounds are
-sample-seeded per execution, so independent count/output branches can
-disagree on the partitioning), and the persist-retaining version
-measured slower with higher job counts (every consumer re-plans the
-in-DAG offset subtree). The eager helper's P-integer collect is the
-cheap, correct design; these tests pin its invariants. The
-cumulative-sum sibling's decimal offsets must keep all 38 digits.
-"""
+"""Guards of the two-pass global ranking (functions/ranks.py): the
+mono-id local index is bit-equivalent to a reference ``row_number()``
+window, the plan stays free of the shapes the rework removed (Window
+operator; the full-width hashpartitioning(_pid) exchange that fed it),
+cumulative decimal offsets keep all 38 digits, and RFM ranks on exact
+decimal sums."""
 
 from __future__ import annotations
 
 import re
+from datetime import datetime
 from decimal import Decimal
 
 from pyspark.sql import Window
@@ -26,12 +18,11 @@ from spark_streaming_practicum_spark.catalog import table
 from spark_streaming_practicum_spark.functions.ranks import (
     global_cumulative_sums,
     global_row_number,
-    release_persisted_frames,
 )
 from spark_streaming_practicum_spark.plans import formatted_plan
 from spark_streaming_practicum_spark.sources.batch import local_frame
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, release_pins
 
 
 def _base(spark):
@@ -64,7 +55,7 @@ def test_mono_id_rank_matches_reference_window(spark):
     eager, n = global_row_number(base, order, rn_name="rn")
     assert _rank_map(eager, "rn") == expected
     assert n == sum(len(v) for v in expected.values())
-    release_persisted_frames()
+    release_pins()
 
 
 def test_rank_plan_avoids_removed_shapes(spark):
@@ -89,7 +80,7 @@ def test_rank_plan_avoids_removed_shapes(spark):
     assert "BroadcastHashJoin" in eager_plan
     # lineage truncated: consumers re-plan a leaf, not the rank subtree
     assert "at localCheckpoint" in eager_plan, eager_plan[:3000]
-    release_persisted_frames()
+    release_pins()
 
 
 def test_rank_project_stays_above_sort(spark):
@@ -107,7 +98,7 @@ def test_rank_project_stays_above_sort(spark):
     plan = formatted_plan(
         _with_local_rank(base, order, spark.sparkContext.defaultParallelism)
     )
-    release_persisted_frames()
+    release_pins()
     # operator ids from the numbered details section
     proj_ids = {
         m.group(1)
@@ -142,3 +133,26 @@ def test_cumulative_decimal_offsets_keep_every_digit(spark):
     assert got == {
         k: Decimal(f"{(k + 1) * 10**25}.{k + 1:06d}") for k in range(8)
     }
+
+
+def test_rfm_ranks_monetary_on_the_exact_sum(spark, tmp_path):
+    """Customer 2's sum is 0.01 above customer 1's and both round to the
+    same double: ranked on the double, c_custkey breaks the tie wrongly."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from spark_streaming_practicum_spark.registry import all_queries
+
+    assert 1e15 + 0.01 == 1e15
+    pq.write_table(pa.table({"c_custkey": [1, 2]}), tmp_path / "customer.parquet")
+    pq.write_table(pa.table({"o_custkey": [1, 2, 2], "o_totalprice": [1e15, 1e15, 0.01],
+                             "o_orderdate": [datetime(1995, 1, 1)] * 3}), tmp_path / "orders.parquet")
+    con = duckdb.connect()
+    for t in ("customer", "orders"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{tmp_path}/{t}.parquet')")
+    d = all_queries()["rfm_customer_segments"]
+    got = sorted(tuple(r) for r in d.fn(spark, str(tmp_path)).collect())
+    release_pins()
+    assert got == sorted(con.execute(d.oracle).fetchall())
+    assert [(r[0], r[3], r[6]) for r in got] == [(1, 1e15, 2), (2, 1e15, 1)]

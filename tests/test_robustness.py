@@ -10,7 +10,7 @@ from spark_streaming_practicum_spark.catalog import table
 from spark_streaming_practicum_spark.streaming.parser import JsonArrayBatchParser
 from spark_streaming_practicum_spark.streaming.router import Router
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, release_pins
 
 
 def test_unknown_table_raises_clean_error(spark):
@@ -191,7 +191,7 @@ def test_results_invariant_to_shuffle_partitioning(spark):
             results = []
             for parts in ("7", "32"):
                 spark.conf.set("spark.sql.shuffle.partitions", parts)
-                spark.catalog.clearCache()
+                release_pins()
                 rows = defs[name].fn(spark, SF_DIR).collect()
                 results.append(sorted(tuple(r) for r in rows))
             assert results[0] == results[1], (
@@ -199,4 +199,4 @@ def test_results_invariant_to_shuffle_partitioning(spark):
             )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.catalog.clearCache()
+        release_pins()

