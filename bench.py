@@ -1,37 +1,34 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark harness: the headline queries at $SPARK_GRAFT_SF_DIR
+(default sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Output contract (round 3 — driver-parseable):
-  * The full per-query timing map is written to ``BENCH_DETAIL.json``
-    (and printed on its own stdout line, before the final line, so the
-    data survives even if the file is not collected).
-  * The LAST stdout line is a compact JSON object small enough to always
-    survive the driver's bounded tail capture:
+Every query runs through ``runner.run_query``: build, plan, execute
+into the noop sink (full execution, no driver-side collect), then
+release its pins. The headline protocol is one warm-up run per query at
+sf0.001 (JVM, codegen and parquet reader paths), then two runs at the
+bench scale.
+
+Output:
+  * ``BENCH_DETAIL.json`` holds ``queries``, each query's min-of-2 wall
+    seconds, and ``layers``, each query's per-layer record
+    (``build_s``, ``plan_s``, ``exec_s``, ``build_jobs``, ``plan_jobs``,
+    ``exec_jobs``). The record is the second run's: the first run at a
+    scale pays that scale's parquet schema inference jobs, and from the
+    second run on the build and plan job counts repeat exactly (exec
+    counts can move by a few AQE jobs). The same map is also printed on
+    its own stdout line.
+  * The LAST stdout line is a compact JSON object:
         {"metric": ..., "value": <total_sec>, "unit": "sec",
          "n_queries": N, "sf": <sf>}
     where ``sf`` is the number in the data dir's ``sf<x>`` name, or null
     for a dir named otherwise.
-    Round 2 emitted everything on one ~2.5 KB line and the driver's tail
-    window truncated its head, producing ``"parsed": null`` — hence the
-    split.
 
-Regression memory: ``python bench.py --compare bench_history/BENCH_DETAIL_r02.json``
-diffs a fresh BENCH_DETAIL.json against a previous round's map.
-Round-9 policy (round-8 verdict task 4): the measured session-to-session
-variance band lives HERE, not in prose. A shared query is flagged
-INVESTIGATE only when it is cross-band — >COMPARE_BAND (1.35x, the
-±35 % JIT/GC session band pinned in PERFORMANCE.md round-8: gbdt
-measured 4.55 s under load and 5.68 s cool on untouched code) AND
-slower by more than COMPARE_ABS_FLOOR seconds. In-band movement is
-counted but not flagged. Flagged queries whose previous time was under
-FIXED_OVERHEAD_CEILING (7 s) are auto-annotated as fixed-overhead:
-for those, one cross-band point is still compatible with session noise
-— confirm with an isolated min-of-N re-run or a scale probe before
-treating it as a plan regression. Exit is non-zero only on INVESTIGATE
-entries.
+``python bench.py --full`` runs every registered query once and writes
+the same two maps to ``BENCH_FULL.json``.
 
-Each query is materialized with the noop sink (full execution, no
-driver-side collect cost).
+``python bench.py --compare PREV.json [--detail CUR.json]`` gates on job
+counts, not wall time: it exits 1 when a query shared by both files runs
+more jobs in any layer than in PREV, 2 when either file has no
+``layers`` record, and 0 otherwise.
 """
 
 from __future__ import annotations
@@ -40,13 +37,14 @@ import json
 import os
 import re
 import sys
-import time
 
 from pyspark.sql import SparkSession
 
-from spark_streaming_practicum_spark.functions.ranks import release_persisted_frames
+from spark_streaming_practicum_spark.catalog import DEFAULT_SF_DIR
 from spark_streaming_practicum_spark.registry import all_queries
+from spark_streaming_practicum_spark.runner import run_query
 from spark_streaming_practicum_spark.session import build_session, driver_memory
+
 
 def _cpu_sample() -> dict | None:
     """One /proc/stat aggregate-cpu snapshot (Linux only; None elsewhere)."""
@@ -61,13 +59,8 @@ def _cpu_sample() -> dict | None:
 
 
 def _host_signature(start: dict | None) -> dict:
-    """Steal/iowait percentage over the bench window plus 1-min loadavg.
-
-    Round-9 verdict task 3: this VM shows 3-5 % hypervisor steal in some
-    sessions and identical plans swing up to 1.55x wall clock; recording
-    the host signature INSIDE the detail JSON lets --compare adjudication
-    distinguish host-degraded from plan-degraded rounds without a manual
-    vmstat sidecar."""
+    """Steal/iowait percentage over the bench window plus 1-min loadavg:
+    a shared host's steal moves wall time with no plan change."""
     sig: dict = {}
     try:
         sig["loadavg1"] = round(os.getloadavg()[0], 2)
@@ -80,10 +73,6 @@ def _host_signature(start: dict | None) -> dict:
         sig["iowait_pct"] = round(100.0 * (end["iowait"] - start["iowait"]) / dt, 2)
     return sig
 
-
-COMPARE_BAND = 1.35  # ±35 % session band (PERFORMANCE.md round-8, measured)
-COMPARE_ABS_FLOOR = 0.3  # seconds; below this, ratio flaps are host noise
-FIXED_OVERHEAD_CEILING = 7.0  # sub-7 s queries: session JIT/GC noise dominates
 
 HEADLINE = [
     # relational core
@@ -278,57 +267,34 @@ HEADLINE = [
 ]
 
 
+LAYER_JOBS = ("build_jobs", "plan_jobs", "exec_jobs")
+
+
 def compare(current_path: str, prev_path: str) -> int:
-    """Diff two BENCH_DETAIL maps; return nonzero only on cross-band
-    (INVESTIGATE) regressions — in-band movement is ambient by the
-    measured ±35 % session band and is counted, not flagged."""
-    with open(current_path) as f:
-        cur_detail = json.load(f)
-    with open(prev_path) as f:
-        prev_detail = json.load(f)
-    cur = cur_detail["queries"]
-    prev = prev_detail["queries"]
-    # Host signatures (present since round 10) travel with the diff:
-    # a cross-band flag measured under visible steal/load is adjudicated
-    # differently from one measured quiet (PERFORMANCE.md round-10).
-    for label, d in (("current", cur_detail), ("previous", prev_detail)):
-        if d.get("host"):
-            print(f"host[{label}]: {json.dumps(d['host'], sort_keys=True)}")
-    investigate = []
-    in_band = 0
-    for name, prev_t in sorted(prev.items()):
-        cur_t = cur.get(name)
-        if cur_t is None:
-            continue
-        if cur_t > prev_t * COMPARE_BAND and cur_t - prev_t > COMPARE_ABS_FLOOR:
-            investigate.append((name, prev_t, cur_t))
-        elif cur_t > prev_t:
-            in_band += 1
-    shared = len(set(cur) & set(prev))
-    print(f"compared {shared} shared queries vs {prev_path}")
-    print(
-        f"{in_band} slower but in-band (<= {COMPARE_BAND}x or <= "
-        f"+{COMPARE_ABS_FLOOR}s): ambient per the pinned session band"
-    )
-    if any(p < FIXED_OVERHEAD_CEILING for _, p, _ in investigate):
-        print(
-            "[fixed-overhead] = prev < %.0fs: one cross-band point is still "
-            "compatible with session noise; confirm with an isolated "
-            "min-of-N re-run or a scale probe before treating as a plan "
-            "regression" % FIXED_OVERHEAD_CEILING
-        )
-    for name, prev_t, cur_t in investigate:
-        note = "  [fixed-overhead]" if prev_t < FIXED_OVERHEAD_CEILING else ""
-        print(
-            f"INVESTIGATE {name}: {prev_t:.3f}s -> {cur_t:.3f}s "
-            f"({cur_t / prev_t:.2f}x){note}"
-        )
-    if not investigate:
-        print(
-            "no cross-band regressions > %.2fx (+%.1fs floor)"
-            % (COMPARE_BAND, COMPARE_ABS_FLOOR)
-        )
-    return 1 if investigate else 0
+    """Diff the per-layer job counts of two detail files: 1 when a shared
+    query runs more jobs in any layer than before, 2 when either file has
+    no ``layers`` record, 0 otherwise."""
+    layers = {}
+    for label, path in (("current", current_path), ("previous", prev_path)):
+        with open(path) as f:
+            detail = json.load(f)
+        if detail.get("host"):
+            print(f"host[{label}]: {json.dumps(detail['host'], sort_keys=True)}")
+        layers[label] = detail.get("layers")
+        if not layers[label]:
+            print(f"{path} has no layers record: job counts cannot be compared")
+            return 2
+    cur, prev = layers["current"], layers["previous"]
+    shared = sorted(set(cur) & set(prev))
+    print(f"compared per-layer job counts of {len(shared)} shared queries vs {prev_path}")
+    rises = [
+        f"RISE {name} {key}: {prev[name][key]} -> {cur[name][key]}"
+        for name in shared
+        for key in LAYER_JOBS
+        if cur[name][key] > prev[name][key]
+    ]
+    print("\n".join(rises) if rises else "no layer runs more jobs")
+    return 1 if rises else 0
 
 
 def sf_label(sf_dir: str) -> float | None:
@@ -336,24 +302,6 @@ def sf_label(sf_dir: str) -> float | None:
     None for a dir not named ``sf<number>``, such as a replicated lake."""
     m = re.fullmatch(r"sf(\d+(?:\.\d+)?)", os.path.basename(sf_dir.rstrip("/")))
     return float(m.group(1)) if m else None
-
-
-def _timed_run(spark: SparkSession, fn, sf_dir: str) -> float:
-    """Seconds to build and materialize one query (noop sink; ``count()``
-    for a streaming frame). Afterwards every pin the run made (persists,
-    checkpoints, dedup-memo entries) is released, so nothing piles up
-    into storage-memory eviction thrash for the next run, and each run
-    builds its memoized frames itself instead of reading the last run's."""
-    start = time.perf_counter()
-    try:
-        df = fn(spark, sf_dir)
-        if df.isStreaming:
-            df.count()
-        else:
-            df.write.mode("overwrite").format("noop").save()
-        return time.perf_counter() - start
-    finally:
-        release_persisted_frames()
 
 
 def _start(app_name: str) -> tuple[str, float | None, SparkSession]:
@@ -373,25 +321,25 @@ def _write_detail(filename: str, detail: dict) -> None:
 
 
 def full_sweep() -> None:
-    """--full: one timed run of EVERY registered query (478) at sf_dir,
-    written to BENCH_FULL.json. Closes the round-5 bench blind spot
-    (305/452 queries had no timing record anywhere — a regression in a
-    non-headline query was invisible to --compare). Single cold run per
-    query, no warmup, no min-of-2: the file is a coverage net, not a
-    precision benchmark — headline queries keep the careful protocol in
-    main(). Compare with:
+    """--full: one run of every registered query at sf_dir, no warm-up,
+    written to BENCH_FULL.json. A coverage net for the queries outside
+    the headline; compare with
         python bench.py --compare BENCH_FULL_prev.json --detail BENCH_FULL.json
     """
     sf_dir, sf, spark = _start("ssp-bench-full")
     cpu0 = _cpu_sample()
     defs = all_queries()
     timings: dict[str, float] = {}
+    layers: dict[str, dict] = {}
     errors: dict[str, str] = {}
     for name in sorted(defs):
         try:
-            timings[name] = round(_timed_run(spark, defs[name].fn, sf_dir), 3)
+            run, _ = run_query(spark, defs[name].fn, sf_dir)
         except Exception as exc:  # noqa: BLE001 — recorded, sweep continues
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
+            continue
+        timings[name] = round(run.wall_s, 3)
+        layers[name] = run.record()
     total = round(sum(timings.values()), 3)
     metric = "full-registry query wall time (noop-materialized, 1 run)"
     _write_detail(
@@ -402,6 +350,7 @@ def full_sweep() -> None:
             "unit": "sec",
             "n_queries": len(timings),
             "queries": timings,
+            "layers": layers,
             "errors": errors,
             "sf": sf,
             "host": _host_signature(cpu0),
@@ -429,18 +378,16 @@ def main() -> None:
     sf_dir, sf, spark = _start("ssp-bench")
     defs = all_queries()
 
-    # Warm up the JVM, whole-stage-codegen compilation and parquet reader
-    # paths by running every headline plan once at the smallest scale
-    # factor — measured times then reflect steady-state execution.
-    # A warmup failure means the headline query itself is broken: fail
-    # loudly and name it (round-2 verdict: silent `pass` hid breakage).
+    # One warm-up run per headline query at the smallest scale: JVM,
+    # codegen and parquet reader paths. A warm-up failure means the
+    # query itself is broken: fail and name it.
     warm_failures: list[tuple[str, str]] = []
     for name in HEADLINE:
         if name not in defs:
             warm_failures.append((name, "not in registry"))
             continue
         try:
-            _timed_run(spark, defs[name].fn, "/root/testdata/sf0.001")
+            run_query(spark, defs[name].fn, DEFAULT_SF_DIR)
         except Exception as exc:  # noqa: BLE001 — reported and fatal below
             warm_failures.append((name, f"{type(exc).__name__}: {exc}"))
     if warm_failures:
@@ -451,17 +398,17 @@ def main() -> None:
     # Host signature covers the MEASURED window only (warmup excluded).
     cpu0 = _cpu_sample()
 
-    # min of 2 runs per query: the host is shared, and the minimum is the
-    # stable estimator of actual plan cost under background load.
-    timings = {
-        name: round(min(_timed_run(spark, defs[name].fn, sf_dir) for _ in range(2)), 3)
-        for name in HEADLINE
-    }
+    # Min of 2 runs per query: the host is shared, and the minimum is the
+    # stable estimator of plan cost under background load. The layer
+    # record is the second run's (see the module docstring).
+    timings: dict[str, float] = {}
+    layers: dict[str, dict] = {}
+    for name in HEADLINE:
+        runs = [run_query(spark, defs[name].fn, sf_dir)[0] for _ in range(2)]
+        timings[name] = round(min(run.wall_s for run in runs), 3)
+        layers[name] = runs[1].record()
 
     total = round(sum(timings.values()), 3)
-    # ONE metric string everywhere (round-3 verdict: the detail file and
-    # the final stdout line used different names for the same number,
-    # breaking round-over-round keying).
     metric = "headline query wall time (noop-materialized)"
     detail = {
         "metric": metric,
@@ -469,12 +416,12 @@ def main() -> None:
         "unit": "sec",
         "n_queries": len(timings),
         "queries": timings,
+        "layers": layers,
         "sf": sf,
         "host": _host_signature(cpu0),
     }
     _write_detail("BENCH_DETAIL.json", detail)
-    # Per-query map on its own EARLY stdout line (survives even when only
-    # the file is lost); the FINAL line is compact so the driver's
+    # The full map on its own stdout line; the FINAL line is compact so a
     # bounded tail capture always parses it.
     print(json.dumps(detail))
     print(

@@ -7,6 +7,9 @@ leaking into a result schema (round 6 caught exactly one such drift).
 This sweep compares the RAW fetchall() rows from both engines instead:
 ints must be ints, Decimals must match as Decimals, floats compare at
 12 dp. Stricter than the gate; anything green here is green there.
+Each query runs through ``runner.run_query``, which releases its pins
+once the rows are collected; the summary reports the persistent RDDs
+and storage memory at the sweep's start and end.
 
 Usage:
     python scripts/driver_contract_sweep.py [--sf 0.1] [N | name|prefix* ...]
@@ -85,6 +88,13 @@ def canon(v):
     return ("s", str(v))
 
 
+def _pins(spark) -> tuple[int, float]:
+    """Persistent RDDs registered in the session, and the MB they hold."""
+    jsc = spark.sparkContext._jsc
+    used = sum(i.memSize() + i.diskSize() for i in jsc.sc().getRDDStorageInfo())
+    return jsc.getPersistentRDDs().size(), used / 2**20
+
+
 def main() -> int:
     spec = importlib.util.spec_from_file_location(
         "__spark_entry__", "/root/repo/__spark_entry__.py"
@@ -116,6 +126,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from spark_streaming_practicum_spark.runner import run_query
     from spark_streaming_practicum_spark.session import driver_memory, host_cpus
 
     cpus = host_cpus()
@@ -137,15 +148,16 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
 
+    pins_at_start = _pins(spark)
     failures, rows_only = [], []
     t_all = time.time()
     for i, name in enumerate(names, 1):
         t0 = time.time()
-        sdf = qs[name](spark, SF_DIR)
-        s_cols = sorted(sdf.columns)
+        _, (s_cols, rows) = run_query(
+            spark, qs[name], SF_DIR, lambda sdf: (sorted(sdf.columns), sdf.collect())
+        )
         s_rows = sorted(
-            (tuple(canon(v) for v in (r[c] for c in s_cols)) for r in sdf.collect()),
-            key=repr,
+            (tuple(canon(v) for v in (r[c] for c in s_cols)) for r in rows), key=repr
         )
         if name not in osql:
             rows_only.append(name)
@@ -179,6 +191,11 @@ def main() -> int:
         f"\n{len(names) - len(failures) - len(rows_only)} strict-OK, "
         f"{len(rows_only)} rows-only, {len(failures)} FAIL "
         f"in {time.time() - t_all:.1f}s"
+    )
+    rdds, mb = _pins(spark)
+    print(
+        f"persistent RDDs {pins_at_start[0]} -> {rdds}, "
+        f"storage memory {pins_at_start[1]:.1f} -> {mb:.1f} MB"
     )
     for name, detail in failures:
         print(f"  FAIL {name}: {detail}")

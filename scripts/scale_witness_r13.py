@@ -22,7 +22,6 @@ import shutil
 import subprocess
 import sys
 import tempfile
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -32,6 +31,7 @@ from pyspark.sql import functions as F  # noqa: E402
 import spark_streaming_practicum_spark.functions.ranks as ranks  # noqa: E402
 import spark_streaming_practicum_spark.registry as registry  # noqa: E402
 from spark_streaming_practicum_spark.catalog import table  # noqa: E402
+from spark_streaming_practicum_spark.runner import run_query  # noqa: E402
 from spark_streaming_practicum_spark.session import build_session  # noqa: E402
 
 SF = "/root/testdata/sf0.1"
@@ -148,18 +148,16 @@ def main() -> None:
         print(f"lake built at {out} (x{repl})", flush=True)
         results = {}
         for name, cur_fn, old_fn in pairs:
-            # warm both shapes once at 1x
+            # warm both shapes once at 1x; the runner releases the
+            # package's pins, the r11 ranks module keeps its own
             for fn in (cur_fn, old_fn):
-                fn(spark, SF).write.mode("overwrite").format("noop").save()
-                ranks.release_persisted_frames()
+                run_query(spark, fn, SF)
                 r11_ranks.release_persisted_frames()
             t = {"cur": [], "r11": []}
             for _ in range(rounds):
                 for tag, fn in (("cur", cur_fn), ("r11", old_fn)):
-                    t0 = time.perf_counter()
-                    fn(spark, out).write.mode("overwrite").format("noop").save()
-                    t[tag].append(round(time.perf_counter() - t0, 3))
-                    ranks.release_persisted_frames()
+                    run, _ = run_query(spark, fn, out)
+                    t[tag].append(round(run.wall_s, 3))
                     r11_ranks.release_persisted_frames()
             results[name] = t
             print(

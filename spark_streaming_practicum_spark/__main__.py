@@ -3,11 +3,15 @@
     python -m spark_streaming_practicum_spark list
     python -m spark_streaming_practicum_spark run agg_pricing_summary \\
         [--sf-dir /root/testdata/sf0.01] [--limit 20]
+
+``run`` shows the first rows, then prints the run's layer record
+(``runner.QueryRun``) as one JSON line.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 
 from .catalog import DEFAULT_SF_DIR
 from .registry import all_queries
@@ -33,11 +37,14 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.name not in defs:
         parser.error(f"unknown query {args.name!r}; see `list`")
+    from .runner import run_query
     from .session import build_session
 
     spark = build_session(app_name=f"ssp-run-{args.name}")
-    df = defs[args.name].fn(spark, args.sf_dir)
-    df.show(args.limit, truncate=False)
+    run, _ = run_query(
+        spark, defs[args.name].fn, args.sf_dir, lambda df: df.show(args.limit, truncate=False)
+    )
+    print(json.dumps({"query": args.name, **run.record()}))
     spark.stop()
     return 0
 

@@ -9,6 +9,7 @@ import pytest
 
 from spark_streaming_practicum_spark.catalog import TABLES
 from spark_streaming_practicum_spark.functions.ranks import release_persisted_frames
+from spark_streaming_practicum_spark.runner import count_jobs
 from spark_streaming_practicum_spark.session import build_session
 
 import os
@@ -41,16 +42,10 @@ def oracle_con():
     con.close()
 
 
-def job_count(spark, group: str, fn) -> int:
-    """Spark jobs run while ``fn()`` runs, counted through a job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+def job_count(spark, fn) -> int:
+    """Spark jobs run while ``fn()`` runs, counted the way the query
+    runner counts them (``runner.count_jobs``)."""
+    return count_jobs(spark, fn)[1]
 
 
 def pytest_addoption(parser):

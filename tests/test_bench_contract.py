@@ -1,11 +1,9 @@
-"""Contract tests for bench.py (round-3 verdict items 1/2/5).
+"""Contract tests for bench.py.
 
-The round-2 bench printed one ~2.5 KB JSON line; the driver's bounded
-stdout tail truncated its head and recorded ``"parsed": null``. The
-contract now is: per-query detail goes to BENCH_DETAIL.json + an early
-stdout line, and the FINAL stdout line is a compact object. Warmup
-failures must be fatal and name the query; ``--compare`` diffs against
-a previous round's detail map.
+Per-query detail goes to BENCH_DETAIL.json and an early stdout line,
+and the FINAL stdout line is a compact object that a bounded tail
+capture still parses. Warm-up failures are fatal and name the query;
+``--compare`` gates on the per-layer job counts of two detail files.
 """
 
 from __future__ import annotations
@@ -30,47 +28,39 @@ def test_headline_queries_all_registered():
     assert missing == []
 
 
+def _detail(path, jobs: dict, wall: float = 1.0, layers: bool = True) -> str:
+    """A detail file whose queries ran ``jobs[name]`` = (build, plan, exec) jobs."""
+    detail = {"queries": {name: wall for name in jobs}}
+    if layers:
+        detail["layers"] = {name: dict(zip(bench.LAYER_JOBS, n)) for name, n in jobs.items()}
+    path.write_text(json.dumps(detail))
+    return str(path)
+
+
 def test_compare_flags_cross_band_regressions(tmp_path, capsys):
-    prev = tmp_path / "prev.json"
-    cur = tmp_path / "cur.json"
-    prev.write_text(
-        json.dumps(
-            {"queries": {"a": 1.0, "b": 0.05, "c": 2.0, "big": 10.0, "gone": 1.0}}
-        )
-    )
-    # a: 2.1x and +1.1s -> cross-band, INVESTIGATE with the sub-7s
-    # fixed-overhead annotation. b: 3x but only +0.1s (< abs floor) ->
-    # host noise, not flagged. c: improved. big: 14s is 1.4x from a
-    # >=7s base -> INVESTIGATE without the annotation. gone: absent in
-    # current -> skipped.
-    cur.write_text(
-        json.dumps({"queries": {"a": 2.1, "b": 0.15, "c": 1.0, "big": 14.0, "new": 9.9}})
-    )
-    rc = bench.compare(str(cur), str(prev))
-    out = capsys.readouterr().out
-    assert rc == 1
-    flagged = {
-        line.split()[1].rstrip(":"): line
-        for line in out.splitlines()
-        if line.startswith("INVESTIGATE")
-    }
-    assert set(flagged) == {"a", "big"}
-    assert "[fixed-overhead]" in flagged["a"]
-    assert "[fixed-overhead]" not in flagged["big"]
+    """A regression is a shared query running more jobs in some layer:
+    ``--compare`` names query and layer and exits 1; a fall or a query
+    in only one file is not flagged, and a file without a layers record
+    is not a pass."""
+    prev = _detail(tmp_path / "prev.json", {"a": (2, 0, 3), "b": (1, 0, 1), "gone": (0, 0, 1)})
+    rise = _detail(tmp_path / "rise.json", {"a": (2, 0, 4), "b": (0, 0, 1), "new": (9, 9, 9)})
+    assert bench.compare(rise, prev) == 1
+    flagged = [line for line in capsys.readouterr().out.splitlines() if line.startswith("RISE")]
+    assert flagged == ["RISE a exec_jobs: 3 -> 4"]
+    bare = _detail(tmp_path / "bare.json", {"a": (2, 0, 3)}, layers=False)
+    assert bench.compare(bare, prev) == 2
+    assert bench.compare(prev, bare) == 2
 
 
 def test_compare_in_band_movement_not_flagged(tmp_path, capsys):
-    """Movement inside the pinned ±35 % session band (round-8 close)
-    must be counted as ambient, not flagged — the whole point of
-    encoding the band (round-8 verdict task 4)."""
-    prev = tmp_path / "prev.json"
-    cur = tmp_path / "cur.json"
-    prev.write_text(json.dumps({"queries": {"a": 1.0, "d": 4.0}}))
-    cur.write_text(json.dumps({"queries": {"a": 1.1, "d": 5.2}}))  # 1.1x, 1.3x
-    assert bench.compare(str(cur), str(prev)) == 0
+    """Wall time is not gated: a 50x slower run with equal or lower job
+    counts in every layer exits 0 and flags nothing."""
+    prev = _detail(tmp_path / "prev.json", {"a": (2, 0, 3), "b": (1, 0, 1)})
+    slower = _detail(tmp_path / "slower.json", {"a": (2, 0, 3), "b": (0, 0, 1)}, wall=50.0)
+    assert bench.compare(slower, prev) == 0
     out = capsys.readouterr().out
-    assert "no cross-band regressions" in out
-    assert "2 slower but in-band" in out
+    assert "no layer runs more jobs" in out
+    assert "RISE" not in out
 
 
 def test_warmup_failure_exits_nonzero_and_names_query(spark, monkeypatch, capsys, tmp_path):

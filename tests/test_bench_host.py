@@ -55,15 +55,17 @@ def test_compare_prints_host_blocks(tmp_path, capsys):
 
     cur = tmp_path / "cur.json"
     prev = tmp_path / "prev.json"
+    layers = {"a": {"build_jobs": 0, "plan_jobs": 0, "exec_jobs": 1}}
     cur.write_text(
         json.dumps(
             {
                 "queries": {"a": 1.0},
+                "layers": layers,
                 "host": {"loadavg1": 0.5, "steal_pct": 0.0, "iowait_pct": 0.0},
             }
         )
     )
-    prev.write_text(json.dumps({"queries": {"a": 1.0}}))
+    prev.write_text(json.dumps({"queries": {"a": 1.0}, "layers": layers}))
     rc = bench.compare(str(cur), str(prev))
     out = capsys.readouterr().out
     assert rc == 0

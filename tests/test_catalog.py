@@ -32,7 +32,7 @@ def test_table_reread_runs_no_job_and_keeps_schema(spark):
     first = {t: table(spark, SF_DIR, t).schema.json() for t in TABLES}
     for t in TABLES:
         out = []
-        jobs = job_count(spark, f"memo-reread-{t}", lambda: out.append(table(spark, SF_DIR, t)))
+        jobs = job_count(spark, lambda: out.append(table(spark, SF_DIR, t)))
         assert jobs == 0, f"re-reading {t} ran {jobs} jobs"
         again = out[0]
         assert again.schema.json() == first[t], t
@@ -94,7 +94,7 @@ def test_sql_reads_run_no_job_and_leave_no_view(name, spark):
     for t in TABLES:
         table(spark, SF_DIR, t)
     before = {t.name for t in spark.catalog.listTables()}
-    jobs = job_count(spark, f"sql-build-{name}", lambda: all_queries()[name].fn(spark, SF_DIR))
+    jobs = job_count(spark, lambda: all_queries()[name].fn(spark, SF_DIR))
     assert jobs <= _SQL_BUILD_JOBS[name], f"{name} build ran {jobs} jobs"
     assert {t.name for t in spark.catalog.listTables()} == before
 

@@ -7,6 +7,9 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+from pathlib import Path
+
+from spark_streaming_practicum_spark.catalog import DEFAULT_SF_DIR
 
 
 def test_producer_cli_writes_batches(tmp_path):
@@ -85,3 +88,21 @@ def test_engine_cli_list():
     # Round 9: the last rows-only query gained a certified-invariant
     # oracle, so every listed entry must carry the [oracle] tag.
     assert "[oracle]" in out.stdout and "[rows-only]" not in out.stdout
+
+
+def test_engine_cli_run_shows_rows_then_the_layer_record():
+    out = subprocess.run(
+        [sys.executable, "-m", "spark_streaming_practicum_spark", "run", "agg_pricing_summary",
+         "--sf-dir", DEFAULT_SF_DIR, "--limit", "3"],
+        capture_output=True,
+        text=True,
+        cwd=Path(__file__).resolve().parents[1],
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    lines = out.stdout.strip().splitlines()
+    table_rows = [line for line in lines if line.startswith("|")]
+    assert "l_returnflag" in table_rows[0] and len(table_rows) == 1 + 3
+    record = json.loads(lines[-1])
+    assert record["query"] == "agg_pricing_summary"
+    assert {"build_s", "plan_s", "exec_s", "build_jobs", "plan_jobs", "exec_jobs"} <= set(record)

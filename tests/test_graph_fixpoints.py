@@ -154,11 +154,9 @@ def test_fixpoint_builds_with_the_lane_collect_only(name, spark):
     frames = [graph._trade_lanes(spark, SF_DIR)]
     if name != "graph_topo_layers":
         frames.append(table(spark, SF_DIR, "nation").select("n_nationkey", "n_name"))
-    collects = job_count(spark, f"pin-{name}-lanes", lambda: [df.collect() for df in frames])
+    collects = job_count(spark, lambda: [df.collect() for df in frames])
     out = []
-    built = job_count(
-        spark, f"pin-{name}-build", lambda: out.append(all_queries()[name].fn(spark, SF_DIR))
-    )
+    built = job_count(spark, lambda: out.append(all_queries()[name].fn(spark, SF_DIR)))
     assert built == collects, f"{name} build ran {built} jobs, the lane collect runs {collects}"
     leaves = out[0]._jdf.queryExecution().sparkPlan().collectLeaves()
     kinds = {leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())}

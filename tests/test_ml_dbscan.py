@@ -89,9 +89,5 @@ def test_dbscan_build_job_count_pinned(spark):
     aggregation's shuffle stage and its result). A persist, an adjacency
     join or a separate noise aggregation creeping back raises it."""
     table(spark, SF_DIR, "embeddings")
-    jobs = job_count(
-        spark,
-        "pin-dbscan-build-jobs",
-        lambda: all_queries()["ml_dbscan_grid_clusters"].fn(spark, SF_DIR),
-    )
+    jobs = job_count(spark, lambda: all_queries()["ml_dbscan_grid_clusters"].fn(spark, SF_DIR))
     assert jobs <= 2, f"ml_dbscan_grid_clusters build ran {jobs} jobs, expected <= 2"

@@ -53,9 +53,5 @@ def test_scripting_loop_reads_orders_once(spark):
     A WHILE condition that re-scans orders raises the count with every
     iteration."""
     table(spark, SF_DIR, "orders")
-    jobs = job_count(
-        spark,
-        "pin-sql-scripting-build-jobs",
-        lambda: all_queries()["sql_scripting_control_flow"].fn(spark, SF_DIR),
-    )
+    jobs = job_count(spark, lambda: all_queries()["sql_scripting_control_flow"].fn(spark, SF_DIR))
     assert jobs <= 31, f"sql_scripting_control_flow build ran {jobs} jobs"

@@ -23,11 +23,14 @@ Source lints ride along:
   instead of a Python-worker RDD scan;
 - every pin goes through the registry in ``functions/ranks.py``, so
   ``release_persisted_frames()`` frees it. The consumer's per-batch
-  persist is the one exception: it unpersists in ``finally``.
+  persist is the one exception: it unpersists in ``finally``;
+- in the package, ``bench.py`` and ``scripts/``, only ``runner.py``
+  materializes a query into the noop sink and releases its pins.
 """
 
 from __future__ import annotations
 
+import ast
 import inspect
 import pathlib
 
@@ -104,3 +107,31 @@ def test_pins_go_through_the_registry():
         sites = _occurrences(call)
         offenders = {path: n for path, n in sites.items() if n != allowed.get(path, "").count(call)}
         assert not offenders, f"{call} outside the pin registry: {offenders}"
+
+
+def _call_sites(name: str, *args: str) -> set[str]:
+    """Files of the package, ``bench.py`` and ``scripts/`` that call
+    ``name`` (with ``args`` as its leading literal arguments)."""
+    root = pathlib.Path(__file__).resolve().parents[1]
+    paths = [root / "bench.py", *root.glob("scripts/*.py")]
+    paths += root.glob("spark_streaming_practicum_spark/**/*.py")
+    return {
+        path.relative_to(root).as_posix()
+        for path in paths
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "attr", getattr(node.func, "id", None)) == name
+        and tuple(getattr(a, "value", None) for a in node.args[: len(args)]) == args
+    }
+
+
+def test_queries_run_through_the_runner():
+    """``runner.run_query`` is the one path that materializes a query and
+    releases its pins. ``scripts/scale_witness_r13.py`` also calls a
+    release: besides the package's ``ranks`` it loads an older ``ranks``
+    module from a git blob, whose pins only that module's own release
+    frees."""
+    runner = "spark_streaming_practicum_spark/runner.py"
+    assert _call_sites("format", "noop") == {runner}
+    witness = "scripts/scale_witness_r13.py"
+    assert _call_sites("release_persisted_frames") == {runner, witness}

@@ -110,14 +110,10 @@ def test_gbdt_stump_job_count_pinned(spark):
     4.1 runs broadcast collects as ordinary jobs. If a Spark upgrade or a
     persist slipping back in breaks that coupling, every round re-executes
     the stump lineage and the job count drifts; count the jobs of one
-    build + collect under a job group to catch it. The table schemas are
-    memoized first so the count does not depend on whether an earlier
-    test already read them (a cold read adds one inference job)."""
+    build + collect to catch it. The table schemas are memoized first so
+    the count does not depend on whether an earlier test already read
+    them (a cold read adds one inference job)."""
     for t in TABLES:
         table(spark, SF_DIR, t)
-    jobs = job_count(
-        spark,
-        "pin-gbdt-stump-jobs",
-        lambda: DEFS["gbdt_stump_boosting"].fn(spark, SF_DIR).collect(),
-    )
+    jobs = job_count(spark, lambda: DEFS["gbdt_stump_boosting"].fn(spark, SF_DIR).collect())
     assert jobs == 17, f"gbdt_stump_boosting ran {jobs} jobs, expected 17"
